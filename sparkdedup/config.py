@@ -99,9 +99,6 @@ class DedupConfig:
     max_anchors: int = 512        # per-file anchor cap (recall bound for
                                   # contained-in-huge-file cases)
     contain_df_cap: int = 64      # drop anchors shared by more files
-    contain_agree_frac: float = 0.8  # retained for API/params stability;
-                                     # superseded in round 4 by the exact
-                                     # anchor-subset gate (containment.py)
     min_contain_chars: int = 64   # ignore tiny files for containment
 
     # --- resume ---

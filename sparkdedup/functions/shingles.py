@@ -420,15 +420,6 @@ SIGNATURE_FIELDS = T.StructType([
 ])
 
 
-def pack_minhash(mh: np.ndarray) -> list:
-    """num_perm uint64 lanes -> int64 lane list (the column encoding)."""
-    return mh.astype(np.int64, copy=False).tolist()
-
-
-def unpack_minhash(lanes) -> np.ndarray:
-    return np.asarray(lanes, dtype=np.int64)
-
-
 def make_signature_udf(cfg: DedupConfig):
     """Arrow-vectorized pandas UDF: content -> signature struct.
 

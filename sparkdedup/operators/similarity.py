@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
+from sparkdedup.operators.lsh import bucket_pairs, dedup_pairs
+
 
 def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -164,17 +166,6 @@ def with_srp_signatures(df: DataFrame, dim: int, n_bits: int,
     return df.withColumn(out_col, srp(F.col(vec_col)))
 
 
-# kept for API compatibility / single-table callers
-def with_srp_signature(df: DataFrame, dim: int, n_bits: int = 16,
-                       seed: int = 42, vec_col: str = "embedding",
-                       out_col: str = "srp") -> DataFrame:
-    """sign-LSH signature as a bigint bitmask — single table."""
-    return (with_srp_signatures(df, dim, n_bits, n_tables=1, seed=seed,
-                                vec_col=vec_col, out_col="_srp_t")
-            .withColumn(out_col, F.element_at("_srp_t", 1))
-            .drop("_srp_t"))
-
-
 def _srp_buckets(df: DataFrame, dim: int, n_bits: int, n_tables: int,
                  seed: int, id_col: str, vec_col: str) -> DataFrame:
     """(id, table_id, srp) — one row per (vector, table). Only the id
@@ -190,32 +181,14 @@ def srp_candidate_pairs(corpus: DataFrame, dim: int, n_bits: int,
                         n_tables: int, bucket_cap: int = 256,
                         seed: int = 137, id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
-    """Candidate (src, dst, gen) pairs from SRP buckets with the SAME
-    skew control as the text LSH (operators/lsh.py:98-106): buckets of
-    B vectors imply B(B-1)/2 pairs, so buckets above ``bucket_cap``
-    emit a STAR to the bucket-min id (gen='star') instead — linear,
-    keeps components connected, never O(n^2). Round-1 verdict: the
-    embedding path lacked exactly this cap."""
+    """Candidate (src, dst, gen) pairs from SRP buckets, expanded by the
+    text LSH's bucket operator (``lsh.bucket_pairs``) with ``bucket_cap``
+    as its cap and no Hamming cut, then deduped across tables. Round-1
+    verdict: the embedding path lacked exactly this skew cap."""
     b = _srp_buckets(corpus, dim, n_bits, n_tables, seed, id_col, vec_col)
-    w = Window.partitionBy("table_id", "srp")
-    b = (b.withColumn("_n", F.count(F.lit(1)).over(w))
-         .withColumn("_root", F.min("_id").over(w))
-         .filter(F.col("_n") > 1))
-    small = b.filter(F.col("_n") <= bucket_cap)
-    a, c = small.alias("a"), small.alias("c")
-    pairs_small = (a.join(c, [F.col("a.table_id") == F.col("c.table_id"),
-                              F.col("a.srp") == F.col("c.srp"),
-                              F.col("a._id") < F.col("c._id")])
-                   .select(F.col("a._id").alias("src"),
-                           F.col("c._id").alias("dst"),
-                           F.lit("allpairs").alias("gen")))
-    big = b.filter(F.col("_n") > bucket_cap)
-    pairs_star = (big.filter(F.col("_id") != F.col("_root"))
-                  .select(F.col("_root").alias("src"),
-                          F.col("_id").alias("dst"),
-                          F.lit("star").alias("gen")))
-    return (pairs_small.unionByName(pairs_star)
-            .groupBy("src", "dst").agg(F.min("gen").alias("gen")))
+    return dedup_pairs(bucket_pairs(
+        b.select(F.col("_id").alias("file_id"), "table_id", "srp"),
+        ["table_id", "srp"], bucket_cap))
 
 
 def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, dim: int,
@@ -269,8 +242,8 @@ def embedding_neardup_edges(corpus: DataFrame, dim: int,
     """Edges (src, dst, cos) with cosine >= threshold, via capped SRP
     buckets — the embedding-cosine near-dup operator. ``n_bits=None``
     derives from the corpus count; oversized buckets fall back to star
-    edges (bounded recall loss under extreme skew — same contract as
-    the text LSH band_pair_cap; a downstream connected-components pass
+    edges (bounded recall loss under extreme skew — the shared
+    ``lsh.bucket_pairs`` contract; a downstream connected-components pass
     restores cluster connectivity for capped groups)."""
     if n_bits is None:
         n_bits = derive_n_bits(corpus.count())

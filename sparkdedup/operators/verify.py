@@ -23,19 +23,6 @@ from pyspark.sql import functions as F
 from sparkdedup.config import DedupConfig
 
 
-def hamming_filter(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Drop pairs whose 64-bit SimHash Hamming distance exceeds
-    ``simhash_ham_max`` — for pair DataFrames that still carry
-    ``simhash_src``/``simhash_dst`` columns. The batch LSH path applies
-    this cut inside the band-bucket expansion (operators/lsh.py) and
-    emits narrow pairs, so it no longer calls this."""
-    cut = cfg.effective_ham_cut
-    if cut is None:          # threshold above the measured cut regime
-        return pairs
-    ham = F.bit_count(F.col("simhash_src").bitwiseXOR(F.col("simhash_dst")))
-    return pairs.filter(ham <= cut)
-
-
 def _lane_agree(a: str, b: str) -> F.Column:
     """Count of agreeing array lanes — one zip_with pass inside
     whole-stage codegen. (The former packed-binary encoding needed
@@ -73,8 +60,8 @@ def jaccard_edges(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig,
     (measured round 5 at sf0.1: verify stage 8.4s -> 4.3s with the
     checkpoint, identical edges; the same pathology at any scale, since
     banding cost grows with the corpus). The checkpointed rows are
-    narrow (src, dst, gen — ~24 B/pair) and bounded by band_pair_cap
-    per band, so the materialization is tiny relative to the signature
+    narrow (src, dst, gen — ~24 B/pair) and bounded by the bucket
+    cap per band, so the materialization is tiny relative to the signature
     table at every scale; blocks are freed by the ContextCleaner when
     the returned DataFrame is garbage-collected. A caller that already
     materialized ``pairs`` (the streaming path, which reuses them for

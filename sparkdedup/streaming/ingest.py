@@ -20,15 +20,11 @@ this module is the Spark-native answer:
     to the sha-prefix partitions the batch actually touches;
   - near (``near_dup=True``): the batch's LSH band keys join against an
     accumulated ``bands`` table (band_id, band_hash, file_id, simhash)
-    — only ids+hashes ride the shuffle — then the standard Hamming cut
-    and MinHash-lane verify. History is never re-featurized: its bands
-    and minhashes are read back from the tables this job wrote. A hot
-    band key (boilerplate) in history is CAPPED exactly like the batch
-    path: up to ``band_pair_cap`` members pair directly, larger buckets
-    contribute only their min-id representative (``gen='cross_star'``)
-    — history members of a band are already interconnected from their
-    own epochs, so the star preserves the connected components while
-    keeping the join linear as history grows (round-3 advice).
+    — only ids+hashes ride the shuffle — via ``lsh.history_pairs``
+    (the batch band-expansion contract: bucket cap, star root, Hamming
+    cut), then the MinHash-lane verify. History is never re-featurized:
+    its bands and minhashes are read back from the tables this job
+    wrote.
 * ``current_clusters`` — the cluster assignment is maintained
   INCREMENTALLY: each epoch contracts its new edges onto the prior
   cluster roots, runs connected components on that (small) contracted
@@ -64,8 +60,8 @@ from sparkdedup.config import DedupConfig
 from sparkdedup.functions.hashing import (with_file_id, with_length_cols,
                                           with_sha256)
 from sparkdedup.functions.shingles import with_signature
-from sparkdedup.operators.lsh import (_band_keys, candidate_pairs,
-                                      dedup_pairs, explode_bands)
+from sparkdedup.operators.lsh import (candidate_pairs, dedup_pairs,
+                                      explode_bands, history_pairs)
 from sparkdedup.operators.verify import jaccard_edges
 from sparkdedup.plans.pipeline import SIGNATURE_COLS
 from sparkdedup.sources.files import INPUT_SCHEMA, split_invalid
@@ -281,53 +277,15 @@ def compact_logs(spark: SparkSession, out_dir: str,
 def _near_dup_edges(spark: SparkSession, sigs: DataFrame, cfg: DedupConfig,
                     sig_dir: str, bands_dir: str, batch_id: int) -> DataFrame:
     """Near-dup edges for a micro-batch: within-batch LSH pairs plus
-    cross-batch pairs from the accumulated band-key table, verified by
-    the same MinHash-lane machinery as the batch pipeline. Pairs are narrow (src, dst, gen) with the Hamming cut
-    applied where the simhashes are already at hand."""
-    within = dedup_pairs(candidate_pairs(sigs, cfg))
-    keys = _band_keys(cfg)
-    batch_bands = explode_bands(sigs, cfg)
+    cross-batch pairs against the accumulated band-key table (both
+    narrow, Hamming-cut, deduped in one pass), verified by the same
+    MinHash-lane machinery as the batch pipeline."""
+    pairs = candidate_pairs(sigs, cfg)
     bands_hist = _history(spark, bands_dir, batch_id)
     if bands_hist is not None:
-        hist = bands_hist.select("file_id", "simhash", *keys)
-        # Aggregate history members per band key BEFORE the join: a
-        # band with <= band_pair_cap members pairs each batch file with
-        # all of them; a hot band contributes only its min-id member
-        # (its historical members are already mutually connected from
-        # their own epochs, so the star keeps the component intact).
-        # Without the cap, B historical members produce B pairs per
-        # matching batch file per band — the quadratic blowup the batch
-        # path already prevents (round-3 advice).
-        hist_g = (hist.groupBy(*keys)
-                  .agg(F.sort_array(
-                      F.collect_list(F.struct("file_id", "simhash")))
-                      .alias("_ms")))
-        ms = F.col("_ms")
-        capped = F.size(ms) > F.lit(cfg.band_pair_cap)
-        members = F.when(capped, F.slice(ms, 1, 1)).otherwise(ms)
-        gen = F.when(capped, F.lit("cross_star")).otherwise(F.lit("cross"))
-        m = F.col("_m")
-        cross = (batch_bands.join(hist_g, keys)
-                 .select(F.col("file_id").alias("b_id"),
-                         F.col("simhash").alias("b_sim"),
-                         F.explode(members).alias("_m"),
-                         gen.alias("gen"))
-                 .filter(F.col("b_id") != m["file_id"]))
-        # threshold-coupled Hamming pre-cut, same contract as the batch
-        # band expansion (config.effective_ham_cut: disabled above the
-        # regime the constant was measured for)
-        cut = cfg.effective_ham_cut
-        if cut is not None:
-            cross = cross.filter(F.bit_count(
-                F.col("b_sim").bitwiseXOR(m["simhash"])) <= cut)
-        cross = cross.select(
-            F.least("b_id", m["file_id"]).alias("src"),
-            F.greatest("b_id", m["file_id"]).alias("dst"),
-            "gen")
-        pairs = (within.unionByName(cross)
-                 .groupBy("src", "dst").agg(F.min("gen").alias("gen")))
-    else:
-        pairs = within
+        pairs = pairs.unionByName(
+            history_pairs(explode_bands(sigs, cfg), bands_hist, cfg))
+    pairs = dedup_pairs(pairs)
     # MinHash for verification: batch side is in-memory; history side
     # comes from the signature table (ids+minhash projection only) —
     # featurize is never re-run on history. The history read is

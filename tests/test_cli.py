@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -48,7 +49,8 @@ def test_cli_end_to_end(spark, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "sparkdedup",
          "-D", str(corpus), "-Z", str(out),
-         "-s", "similar", "-ro", "True", "-proc", "8", "-d", "True"],
+         "-s", "similar", "-ro", "True",
+         "-proc", str(min(8, os.cpu_count() or 1)), "-d", "True"],
         capture_output=True, text=True, cwd=str(REPO), timeout=420)
     assert r.returncode == 0, r.stderr[-2000:]
     assert (out / "clusters").exists()

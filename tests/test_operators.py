@@ -8,7 +8,8 @@ from sparkdedup.config import DedupConfig
 from sparkdedup.functions.hashing import with_file_id, with_length_cols, with_sha256
 from sparkdedup.functions.shingles import with_signature
 from sparkdedup.operators.exact import exact_edges
-from sparkdedup.operators.lsh import candidate_pairs, dedup_pairs
+from sparkdedup.operators.lsh import (candidate_pairs, dedup_pairs,
+                                      explode_bands)
 from sparkdedup.operators.ranking import lower_quality, match_counts, rank_clusters
 from sparkdedup.operators.verify import jaccard_edges
 from sparkdedup.sources.files import REASON_NULL, REASON_UNSUPPORTED, split_invalid
@@ -68,6 +69,60 @@ def test_lsh_band_cap_emits_star(spark):
     assert "star" in gens
     # star edges bounded linear: <= n-1 per band bucket, never ~n^2/2
     assert len(pairs) < 45  # full clique would be 45
+
+    # Buckets of exactly cap (3 copies) and cap+1 (4 copies) members,
+    # plus near-variants whose band collisions have mixed Hamming
+    # distances, with the Hamming cut on ("similar") and off (0.5):
+    # every case equals a brute-force expansion of the same band rows.
+    fns = [f"def fn_{i}(v): return v * {i}\n" for i in range(24)]
+    rows = ([("r", f"c{i}", "c", "python", "cap-sized bucket\n" * 9)
+             for i in range(3)]
+            + [("r", f"o{i}", "c", "python", "over-cap bucket\n" * 9)
+               for i in range(4)]
+            + [("r", f"m{keep}_{v}", "c", "python",
+                "".join(fns[:keep])
+                + "".join(f"other_{v}_{j} = {j}\n" for j in range(24 - keep)))
+               for keep in (20, 12, 10) for v in range(2)])
+    seen = set()
+    for sim in ("similar", 0.5):
+        cfg = DedupConfig(similarity=sim, band_pair_cap=3)
+        sigs = _sigs(spark, rows, cfg)
+        want, sizes = _brute_force_pairs(explode_bands(sigs, cfg).collect(),
+                                         cfg)
+        assert {3, 4} <= sizes
+        got = {(p["src"], p["dst"]): p["gen"]
+               for p in dedup_pairs(candidate_pairs(sigs, cfg)).collect()}
+        assert got == want
+        seen.add(frozenset(got))
+    assert len(seen) == 2  # the Hamming cut drops some band pairs
+
+
+def _brute_force_pairs(bands, cfg):
+    """Reference bucket expansion in plain Python: ≤ cap members emit
+    all pairs, larger buckets a star to the min id, both behind the
+    Hamming cut; cross-band dedup keeps the min gen."""
+    from itertools import combinations
+    buckets = {}
+    for r in bands:
+        buckets.setdefault((r["band_id"], r["band_hash"]), []).append(
+            (r["file_id"], r["simhash"]))
+    cut = cfg.effective_ham_cut
+
+    def ham(a, b):
+        return bin((a[1] ^ b[1]) & (2 ** 64 - 1)).count("1")
+
+    want = {}
+    for ms in buckets.values():
+        if len(ms) <= cfg.band_pair_cap:
+            cands = [(a, b, "allpairs") for a, b in combinations(ms, 2)]
+        else:
+            root = min(ms)
+            cands = [(root, b, "star") for b in ms if b != root]
+        for a, b, gen in cands:
+            if cut is None or ham(a, b) <= cut:
+                key = (min(a[0], b[0]), max(a[0], b[0]))
+                want[key] = min(want.get(key, gen), gen)
+    return want, {len(ms) for ms in buckets.values()}
 
 
 def test_verify_threshold_and_hamming(spark):

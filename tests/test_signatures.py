@@ -9,10 +9,9 @@ from hypothesis import strategies as st
 
 from sparkdedup.config import DedupConfig
 from sparkdedup.functions.shingles import (BatchScratch, minhash_params,
-                                           normalize_text, pack_minhash,
-                                           shingle_hashes, signature_of,
-                                           signatures_of_batch,
-                                           unpack_minhash, with_signature)
+                                           normalize_text, shingle_hashes,
+                                           signature_of, signatures_of_batch,
+                                           with_signature)
 
 CFG = dict(k=7, num_perm=128, seed=42, anchor_mod=32, max_anchors=512)
 
@@ -156,9 +155,7 @@ def test_spark_udf_matches_kernel(spark):
                                        cfg.seed, cfg.anchor_mod,
                                        cfg.max_anchors, params)
         got = out[path]
-        assert got["minhash"] == pack_minhash(mh)
-        assert unpack_minhash(got["minhash"]).tolist() == (
-            mh.astype("int64").tolist())
+        assert got["minhash"] == mh.astype("int64").tolist()
         assert got["simhash"] == sim
         assert got["n_shingles"] == n
         assert got["anchors"] == anc.tolist()

@@ -458,3 +458,50 @@ def test_auto_compaction_every_k_epochs(spark, tmp_path):
     batch_cc = {r["file_id"]: r["cluster_id"] for r in connected_components(
         spark.read.parquet(str(out / "edges"))).collect()}
     assert got == batch_cc
+
+
+def test_near_dup_history_cap_emits_cross_star(spark, tmp_path):
+    """A history band bucket above ``band_pair_cap`` contributes only its
+    min member to the probe x history join (``gen='cross_star'``):
+    epoch 0 plants a family of mutual near-duplicates, epoch 1 adds one
+    more member. At ``band_pair_cap=2`` the capped path must fire, and
+    the clusters must equal the same ingest at the default cap."""
+    from sparkdedup.operators.lsh import explode_bands, history_pairs
+    from sparkdedup.streaming.ingest import current_clusters
+    base = "".join(f"def step_{i}(acc): return acc * {i} + {i * 7}\n"
+                   for i in range(12))
+    family = [base + f"# variant {i}\n" for i in range(5)]
+    epochs = [
+        [("r0", f"f{i}.py", "c0", "python", family[i]) for i in range(4)]
+        + [("r0", "lonely.py", "c0", "python", "nothing like anything " * 9)],
+        [("r1", "f4.py", "c1", "python", family[4])],
+    ]
+    clusters = {}
+    for cap in (2, DedupConfig().band_pair_cap):
+        cfg = DedupConfig(similarity="similar", band_pair_cap=cap)
+        src, out = tmp_path / f"in{cap}", tmp_path / f"out{cap}"
+        for i, rows in enumerate(epochs):
+            _write_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
+                         str(src / f"b{i}"))
+            _await(incremental_dedup(spark, cfg, str(src / "*"), str(out),
+                                     near_dup=True))
+        sigs = spark.read.parquet(str(out / "signatures"))
+        ids = {r["path"]: r["file_id"]
+               for r in sigs.select("path", "file_id").collect()}
+        clusters[cap] = {r["file_id"]: r["cluster_id"]
+                         for r in current_clusters(spark, str(out)).collect()}
+        family_ids = {ids[f"f{i}.py"] for i in range(5)}
+        assert len({clusters[cap][f] for f in family_ids}) == 1
+        assert ids["lonely.py"] not in clusters[cap]
+        bands = spark.read.parquet(str(out / "bands"))
+        hist = bands.filter(F.col("ingest_batch") == 0)
+        probe = sigs.filter(F.col("path") == "f4.py")
+        gens = {r["gen"] for r in history_pairs(
+            explode_bands(probe, cfg), hist, cfg).collect()}
+        if cap == 2:
+            assert (hist.groupBy("band_id", "band_hash").count()
+                    .filter(F.col("count") > cap).count()) > 0
+            assert "cross_star" in gens
+        else:
+            assert gens == {"cross"}
+    assert clusters[2] == clusters[DedupConfig().band_pair_cap]

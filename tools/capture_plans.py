@@ -19,7 +19,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from sparkdedup.config import DedupConfig  # noqa: E402
 from sparkdedup.corpus import documents_as_files  # noqa: E402
 from sparkdedup.operators.lsh import candidate_pairs, dedup_pairs  # noqa: E402
-from sparkdedup.operators.similarity import cosine_topk_vectorized  # noqa: E402
+from sparkdedup.operators.similarity import (  # noqa: E402
+    cosine_topk_vectorized, derive_n_bits, srp_candidate_pairs)
 from sparkdedup.plans.pipeline import (build_signatures,  # noqa: E402
                                        search_clusters)
 from sparkdedup.session import get_spark  # noqa: E402
@@ -56,6 +57,8 @@ def main() -> None:
     dump("q3_ranked", res.ranked)
     dump("q4_cosine_topk", cosine_topk_vectorized(
         emb, emb.filter(F.col("vec_id") < 20), k=5))
+    dump("q5_srp_pairs", srp_candidate_pairs(
+        emb, dim=64, n_bits=derive_n_bits(emb.count()), n_tables=8))
     res.release()
     sigs.unpersist()
 
