@@ -51,8 +51,10 @@ ALLOWED_LANGS: tuple[str, ...] = tuple(sorted(set(LANG_EXTS.values())))
 
 #: Version of the signature ALGORITHM + on-disk layout (minhash family,
 #: column types, band-key derivation). Bump whenever either changes so
-#: params_hash-keyed artifacts (resume checkpoints, streaming tables)
-#: recompute instead of mixing incompatible signature families.
+#: params_hash-keyed artifacts (the batch resume checkpoints) recompute
+#: instead of mixing incompatible signature families. The streaming
+#: tables are NOT params_hash-keyed: they live under the caller's
+#: ``out_dir``, so a layout change there needs a fresh ``out_dir``.
 #: v2 = a*h (mod 2^64) minhash lanes as array<long> (round 3).
 SIGNATURE_FORMAT_VERSION = 2
 

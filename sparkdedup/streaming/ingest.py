@@ -16,8 +16,9 @@ this module is the Spark-native answer:
   featurized once, appended to the ``signatures`` table, and dup edges
   are emitted for collisions WITHIN the batch and AGAINST history:
 
-  - exact: sha256 join against the accumulated signature table, pruned
-    to the sha-prefix partitions the batch actually touches;
+  - exact: sha256 join against the accumulated signature table's
+    ``(file_id, sha256)`` projection, semi-joined to the batch's sha256
+    set through a broadcast before the min-id representative groupBy;
   - near (``near_dup=True``): the batch's LSH band keys join against an
     accumulated ``bands`` table (band_id, band_hash, file_id, simhash)
     — only ids+hashes ride the shuffle — via ``lsh.history_pairs``
@@ -66,13 +67,6 @@ from sparkdedup.operators.verify import jaccard_edges
 from sparkdedup.plans.pipeline import SIGNATURE_COLS
 from sparkdedup.sources.files import INPUT_SCHEMA, split_invalid
 
-#: number of sha256-prefix hash buckets the signatures table is
-#: partitioned by — the join against history prunes to the buckets a
-#: micro-batch touches (2 hex chars = 256 buckets; at 10^12 files each
-#: bucket is still independently scannable).
-SHA_BUCKETS_PREFIX_LEN = 2
-
-
 def read_file_stream(spark: SparkSession, path: str,
                      max_files_per_trigger: int | None = None) -> DataFrame:
     """``readStream`` over a directory of parquet files with the
@@ -91,20 +85,6 @@ def stream_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
     sigs = with_signature(
         with_length_cols(with_sha256(with_file_id(valid))), cfg)
     return sigs.select(*SIGNATURE_COLS)
-
-
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """FS-agnostic existence probe: ask the reader, not pathlib —
-    works for file:/hdfs:/s3: URIs alike (round-2 advice)."""
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except AnalysisException:
-        return False
-    except Exception as exc:  # Spark 4 raises connect-style subclasses
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return False
-        raise
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -148,9 +128,18 @@ def _read_log(spark: SparkSession, path: str) -> DataFrame | None:
     crash between the snapshot write and the deletes therefore cannot
     double-count rows, which makes the deletes pure space reclamation
     and the whole compaction crash-safe without any atomic rename.
-    Returns None when the table has no data yet."""
+    Returns None when the table has no data yet: the reader itself is
+    the FS-agnostic existence probe, so the epochs are listed once."""
     snap_path, upto = _latest_snapshot(spark, path)
-    epochs = spark.read.parquet(path) if _table_exists(spark, path) else None
+    try:
+        epochs = spark.read.parquet(path)
+    except AnalysisException:
+        epochs = None
+    except Exception as exc:  # Spark 4 raises connect-style subclasses
+        if "PATH_NOT_FOUND" not in str(exc) \
+                and "Path does not exist" not in str(exc):
+            raise
+        epochs = None
     snap = spark.read.parquet(snap_path) if snap_path is not None else None
     if epochs is not None and snap is not None:
         return snap.unionByName(
@@ -180,7 +169,6 @@ _COMPACT_KEYS = {
     "signatures": ["file_id"],
     "bands": ["file_id", "band_id"],
 }
-_COMPACT_PARTITION = {"signatures": ["sha_prefix"]}
 
 
 def compact_logs(spark: SparkSession, out_dir: str,
@@ -245,10 +233,8 @@ def compact_logs(spark: SparkSession, out_dir: str,
                 .groupBy(*keys)
                 .agg(F.max(F.struct(*ordered)).alias("_v"))
                 .select(*keys, *[F.col(f"_v.{c}") for c in ordered]))
-        writer = snap.write.mode("overwrite")
-        if t in _COMPACT_PARTITION:
-            writer = writer.partitionBy(*_COMPACT_PARTITION[t])
-        writer.parquet(f"{_snapshot_dir(path)}/upto={upto}")
+        snap.write.mode("overwrite").parquet(
+            f"{_snapshot_dir(path)}/upto={upto}")
         # reclamation: folded epoch dirs, then superseded snapshots
         if fs.exists(hp):
             for st in fs.listStatus(hp):
@@ -272,6 +258,35 @@ def compact_logs(spark: SparkSession, out_dir: str,
                     sfs.delete(st.getPath(), True)
         done[t] = upto
     return done
+
+
+def _exact_history_edges(spark: SparkSession, new: DataFrame, sig_dir: str,
+                         batch_id: int) -> DataFrame | None:
+    """Exact edges from a micro-batch's ``(file_id, sha256)`` rows to
+    the strictly-earlier signature history, or None without history.
+
+    The history is read as its ``(file_id, sha256)`` projection and
+    semi-joined to the batch's sha256 set (broadcast: a micro-batch is
+    small), so only the matching history rows reach the aggregate. Each
+    historical sha keeps one representative, its min id: copies of a
+    hash are already mutually connected from the epochs that ingested
+    them, so pairing each new copy with the min-id member keeps
+    components intact and the join linear (a 10^6-copy boilerplate sha
+    would otherwise emit 10^6 edges per new copy)."""
+    sha_hist = _history(spark, sig_dir, batch_id)
+    if sha_hist is None:
+        return None
+    hist = (sha_hist.select("file_id", "sha256")
+            .join(F.broadcast(new.select("sha256")), "sha256", "left_semi")
+            .groupBy("sha256")
+            .agg(F.min("file_id").alias("src")))
+    return (hist.join(new.select(F.col("file_id").alias("dst"), "sha256"),
+                      "sha256")
+            .filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("src"),
+                    F.greatest("src", F.col("dst")).alias("dst"),
+                    F.lit(0.0).alias("dist"),
+                    F.lit("exact").alias("kind")))
 
 
 def _near_dup_edges(spark: SparkSession, sigs: DataFrame, cfg: DedupConfig,
@@ -418,47 +433,13 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
     invalid.write.mode("overwrite").parquet(f"{invalid_dir}/{epoch}")
     sigs = with_signature(
         with_length_cols(with_sha256(with_file_id(valid))), cfg)
-    # 'p' prefix keeps the partition value non-numeric: Spark's
-    # partition-column type inference would otherwise read an all-digit
-    # epoch (sha_prefix=42) as INT and a later hex one (sha_prefix=4e)
-    # as STRING — conflicting types across directories break the read
-    sigs = (sigs.select(*SIGNATURE_COLS)
-            .withColumn("sha_prefix",
-                        F.concat(F.lit("p"),
-                                 F.substring("sha256", 1,
-                                             SHA_BUCKETS_PREFIX_LEN)))
-            .persist())  # ONE featurize pass feeds every branch below
+    # ONE featurize pass feeds every branch below
+    sigs = sigs.select(*SIGNATURE_COLS).persist()
     try:
         if sigs.count() == 0:
             return
-        new = sigs.select("file_id", "sha256", "sha_prefix")
-        # exact edges vs HISTORY: scan only the sha-prefix partitions
-        # this batch touches (partition pruning via the IN filter —
-        # the compaction snapshot is partitioned by sha_prefix too) and
-        # only the two join columns (column pruning)
-        sha_hist = _history(spark, sig_dir, batch_id)
-        if sha_hist is not None:
-            prefixes = [r["sha_prefix"]
-                        for r in new.select("sha_prefix").distinct().collect()]
-            # one representative per historical sha: copies of a hash
-            # are already mutually connected from the epochs that
-            # ingested them, so pairing each new copy with the min-id
-            # member keeps components intact and the join linear (a
-            # 10^6-copy boilerplate sha would otherwise emit 10^6 edges
-            # per new copy)
-            hist = (sha_hist
-                    .filter(F.col("sha_prefix").isin(prefixes))
-                    .groupBy("sha256")
-                    .agg(F.min("file_id").alias("src")))
-            vs_hist = (hist.join(new.select(F.col("file_id").alias("dst"),
-                                            "sha256"), "sha256")
-                       .filter(F.col("src") != F.col("dst"))
-                       .select(F.least("src", "dst").alias("src"),
-                               F.greatest("src", F.col("dst")).alias("dst"),
-                               F.lit(0.0).alias("dist"),
-                               F.lit("exact").alias("kind")))
-        else:
-            vs_hist = None
+        vs_hist = _exact_history_edges(
+            spark, sigs.select("file_id", "sha256"), sig_dir, batch_id)
         # edges WITHIN the batch: same star pattern as operators/exact.py
         from sparkdedup.operators.exact import exact_edges
         edges = exact_edges(sigs, cfg)
@@ -486,8 +467,7 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
         if bands_dir is not None:
             (explode_bands(sigs, cfg)
              .write.mode("overwrite").parquet(f"{bands_dir}/{epoch}"))
-        (sigs.write.mode("overwrite").partitionBy("sha_prefix")
-         .parquet(f"{sig_dir}/{epoch}"))
+        sigs.write.mode("overwrite").parquet(f"{sig_dir}/{epoch}")
         if compact_every > 0 and batch_id > 0 \
                 and batch_id % compact_every == 0:
             # sig_dir is always "<out_dir>/signatures" (incremental_dedup)
@@ -515,12 +495,18 @@ def incremental_dedup(spark: SparkSession, cfg: DedupConfig,
     by |snapshot| + |tail| for unbounded ingests; 0 (default) leaves
     compaction to an external maintenance schedule.
     Output layout under ``out_dir`` (each sink partitioned by
-    ``ingest_batch`` for idempotent epoch overwrite):
-    ``signatures/`` (sub-partitioned by sha_prefix), ``edges/`` (exact
+    ``ingest_batch`` for idempotent epoch overwrite, one data directory
+    per epoch and no sub-partitions): ``signatures/``, ``edges/`` (exact
     AND near rows, one per unordered pair, ``kind`` distinguishes),
     ``clusters/`` (per-epoch deltas; read via ``current_clusters``),
     ``bands/`` (near_dup only), ``invalid/``, ``_checkpoint/`` (Spark
     streaming offsets). ``out_dir`` may be any Hadoop-FS URI.
+
+    An ``out_dir`` written by an earlier version, whose signature epochs
+    were sub-partitioned by ``sha_prefix=``, cannot be resumed: the
+    history read over old and new epoch directories fails with Spark's
+    ``CONFLICTING_PARTITION_COLUMN_NAMES``. Re-ingest into a fresh
+    ``out_dir`` instead.
     """
     base = out_dir.rstrip("/")
     sig_dir = f"{base}/signatures"

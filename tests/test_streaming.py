@@ -63,14 +63,18 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
     # within-batch dup: c.py vs c_dup.py
     assert frozenset((ids["c.py"], ids["c_dup.py"])) in pairs
     assert all(e["kind"] == "exact" and e["dist"] == 0.0 for e in edges)
-    # epoch + sha-prefix partitioning present (idempotent epoch
-    # overwrite; history joins prune on sha_prefix)
+    # one data directory per epoch (idempotent epoch overwrite): parquet
+    # files only, no sub-partition directories, no derived columns
     sig_root = str(out / "signatures")
     epochs = [p for p in os.listdir(sig_root)
               if p.startswith("ingest_batch=")]
     assert epochs
-    assert any(p.startswith("sha_prefix=")
-               for b in epochs for p in os.listdir(os.path.join(sig_root, b)))
+    for b in epochs:
+        entries = os.listdir(os.path.join(sig_root, b))
+        assert any(p.endswith(".parquet") for p in entries), (b, entries)
+        assert not any(os.path.isdir(os.path.join(sig_root, b, p))
+                       for p in entries), (b, entries)
+    assert "sha_prefix" not in sigs.columns
 
 
 def test_incremental_near_dup_across_batches(spark, tmp_path):
@@ -343,6 +347,66 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
     x2 = sigs.select("file_id").collect()[0][0]
     assert {frozenset((r["src"], r["dst"])) for r in rows_out} \
         == {frozenset((ids["x.py"], x2))}
+
+
+def test_exact_history_read_is_pruned(spark, tmp_path):
+    """The exact-vs-history join reads only the history's
+    ``(file_id, sha256)`` columns, semi-joined (broadcast) to the
+    batch's sha256 set before the min-id groupBy, and still pairs a new
+    copy with the min-id historical representative of its hash."""
+    import re
+    from sparkdedup.plans.pipeline import SIGNATURE_COLS
+    from sparkdedup.sources.files import split_invalid
+    from sparkdedup.functions.hashing import (with_file_id,
+                                              with_length_cols, with_sha256)
+    from sparkdedup.functions.shingles import with_signature
+    from sparkdedup.streaming.ingest import _exact_history_edges, _merge_batch
+    cfg = DedupConfig()
+    out = tmp_path / "out"
+    dirs = dict(sig_dir=str(out / "signatures"),
+                edges_dir=str(out / "edges"),
+                invalid_dir=str(out / "invalid"),
+                clusters_dir=str(out / "clusters"))
+    same = "def chain(): return 'identical content across epochs'\n" * 3
+    for epoch in range(2):   # one copy of ``same`` per epoch + non-matches
+        rows = [(f"r{epoch}", f"u{epoch}_{i}.py", "c", "python",
+                 f"unrelated content {epoch} {i} " * 20) for i in range(3)]
+        rows.append((f"r{epoch}", f"s{epoch}.py", "c", "python", same))
+        _merge_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
+                     epoch, cfg, **dirs)
+    batch = spark.createDataFrame(
+        [("r9", "s9.py", "c9", "python", same),
+         ("r9", "new.py", "c9", "python", "brand new content " * 20)],
+        INPUT_SCHEMA)
+    valid, _ = split_invalid(batch, cfg)
+    sigs = with_signature(
+        with_length_cols(with_sha256(with_file_id(valid))),
+        cfg).select(*SIGNATURE_COLS)
+    e = _exact_history_edges(spark, sigs.select("file_id", "sha256"),
+                             dirs["sig_dir"], 2)
+    qe = e._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    assert _ancestors_contain(plan, ("Relation [", "sha256"),
+                              "Join LeftSemi, (sha256"), \
+        "history signature scan must sit under the sha256 semi-join"
+    # the history table is the plan's only file scan (the batch side is
+    # in-memory)
+    physical = qe.executedPlan().toString()
+    scans = re.findall(r"FileScan parquet .*?ReadSchema: struct<([^>]*)>",
+                       physical)
+    assert len(scans) == 1, physical
+    assert _ancestors_contain(physical, ("FileScan parquet",),
+                              "LeftSemi, BuildRight"), \
+        "the batch's sha256 set must be the broadcast side"
+    assert not {"minhash", "content", "anchors"} & {
+        f.split(":")[0] for f in scans[0].split(",")}, scans[0]
+    hist = spark.read.parquet(dirs["sig_dir"])
+    ids = {r["path"]: r["file_id"]
+           for r in hist.select("path", "file_id").collect()}
+    new_id = sigs.filter(F.col("path") == "s9.py").first()["file_id"]
+    rep = min(ids["s0.py"], ids["s1.py"])
+    assert {(r["src"], r["dst"], r["dist"], r["kind"]) for r in e.collect()} \
+        == {(min(rep, new_id), max(rep, new_id), 0.0, "exact")}
 
 
 def test_compaction_bounds_history_and_preserves_semantics(spark, tmp_path):
