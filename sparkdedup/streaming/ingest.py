@@ -67,6 +67,7 @@ from sparkdedup.operators.verify import jaccard_edges
 from sparkdedup.plans.pipeline import SIGNATURE_COLS
 from sparkdedup.sources.files import INPUT_SCHEMA, split_invalid
 
+
 def read_file_stream(spark: SparkSession, path: str,
                      max_files_per_trigger: int | None = None) -> DataFrame:
     """``readStream`` over a directory of parquet files with the
@@ -503,7 +504,7 @@ def incremental_dedup(spark: SparkSession, cfg: DedupConfig,
     streaming offsets). ``out_dir`` may be any Hadoop-FS URI.
 
     An ``out_dir`` written by an earlier version, whose signature epochs
-    were sub-partitioned by ``sha_prefix=``, cannot be resumed: the
+    were sub-partitioned by a sha256 prefix, cannot be resumed: the
     history read over old and new epoch directories fails with Spark's
     ``CONFLICTING_PARTITION_COLUMN_NAMES``. Re-ingest into a fresh
     ``out_dir`` instead.
