@@ -13,7 +13,9 @@ Sandbox note: stage tables are parquet directories with JSON-lines
 lineage (`_lineage.jsonl`). On a production cluster the same layout
 maps 1:1 onto Iceberg tables (``df.writeTo(...).append()`` + a lineage
 table); Iceberg's runtime jar is not in this environment, so the
-format is pluggable at exactly one seam (`_write`/`_read`).
+format is pluggable at exactly one seam: the parquet
+``write``/``read.parquet`` calls in ``StageRunner.stage`` and
+``StageRunner.bucketed_stage``.
 
 difPy has no resume facility at all (a killed run restarts from
 scratch); this is required by BASELINE.json, not a reference port.
@@ -30,6 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
+from sparkdedup.operators.components import connected_components
+from sparkdedup.operators.ranking import rank_clusters
+from sparkdedup.plans.pipeline import (SearchResult, _distinct_reps,
+                                       build_signatures, plan_edges)
+from sparkdedup.sources.files import split_invalid
 
 
 @dataclass
@@ -152,21 +159,14 @@ class KillSignal(Exception):
 def resumable_run(spark: SparkSession, cfg: DedupConfig,
                   files: DataFrame, stop_after: str | None = None):
     """Checkpointed build+search. Returns (SearchResult, StageRunner).
+    Each stage wraps the call ``run`` makes (``build_signatures``,
+    ``plan_edges``, ``connected_components``) in ``StageRunner``
+    materialization, so a resumed run plans its edges the same way.
 
     ``stop_after`` kills the job right after the named stage commits —
     the T4 resume fixture. A rerun with the same work_dir + config
     resumes from the committed stages.
     """
-    from sparkdedup.plans.pipeline import SearchResult, _distinct_reps
-    from sparkdedup.operators.components import connected_components
-    from sparkdedup.operators.containment import containment_edges
-    from sparkdedup.operators.exact import exact_edges
-    from sparkdedup.operators.lsh import candidate_pairs, dedup_pairs
-    from sparkdedup.operators.ranking import rank_clusters
-    from sparkdedup.operators.verify import jaccard_edges
-    from sparkdedup.plans.pipeline import build_signatures
-    from sparkdedup.sources.files import split_invalid
-
     runner = StageRunner(spark, cfg)
 
     def _check(stage: str) -> None:
@@ -182,35 +182,12 @@ def resumable_run(spark: SparkSession, cfg: DedupConfig,
         return build_signatures(spark, cfg, bucket_df)[0]
 
     sigs = runner.bucketed_stage("signatures", valid, featurize)
+    n_sigs = runner.stages[-1].rows
     _check("signatures")
 
-    def edges_build() -> DataFrame:
-        # Mirror pipeline.search_clusters exactly: reps computed ONCE and
-        # shared by the near and containment branches. Containment must
-        # run on _distinct_reps even at threshold 0 (the CLI default) —
-        # exact-dup mass would otherwise push anchor document frequency
-        # past contain_df_cap and silently lose containment edges that a
-        # non-resumable run finds (round-2 advice).
-        e = exact_edges(sigs, cfg).withColumn("gen", F.lit("exact"))
-        reps = _distinct_reps(sigs, cfg)
-        near = jaccard_edges(dedup_pairs(candidate_pairs(reps, cfg)),
-                             reps, cfg)
-        e = e.unionByName(near)
-        if cfg.containment:
-            # containment stage frees its own transient storage
-            e = e.unionByName(
-                containment_edges(reps, cfg).withColumn(
-                    "gen", F.lit("contain")))
-        # struct tie-break: ties on dist are real (exact + all-lane near
-        # both at 0.0) and min_by alone is nondeterministic on them — a
-        # resumed run must reproduce the original stage byte-for-byte
-        return e.groupBy("src", "dst").agg(
-            F.min("dist").alias("dist"),
-            F.min_by("kind", F.struct(F.col("dist"), F.col("kind")))
-            .alias("kind"),
-            F.min("gen").alias("gen"))
-
-    edges = runner.stage("edges", edges_build)
+    # reps stay uncached: the branches re-read the committed signatures
+    edges = runner.stage("edges", lambda: plan_edges(
+        sigs, _distinct_reps(sigs, cfg, n_rows=n_sigs), cfg))
     _check("edges")
 
     clusters = runner.stage("clusters",
@@ -220,5 +197,5 @@ def resumable_run(spark: SparkSession, cfg: DedupConfig,
     ranked = rank_clusters(clusters,
                            sigs.select("file_id", "repo", "path", "n_chars"))
     res = SearchResult(cfg=cfg, edges=edges, clusters=clusters,
-                       ranked=ranked, invalid=invalid)
+                       ranked=ranked, invalid=invalid, _n_files=n_sigs)
     return res, runner

@@ -63,10 +63,16 @@ def build_signatures(spark: SparkSession, cfg: DedupConfig,
     if files is None:
         files = read_files(spark, cfg)
     valid, invalid = split_invalid(files, cfg)
-    valid = widen_narrow_scan(valid)
+    return featurize(widen_narrow_scan(valid), cfg), invalid
+
+
+def featurize(valid: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """identity + sha256 + length cols + MinHash/SimHash over valid
+    rows, projected to ``SIGNATURE_COLS``. Row-at-a-time only, so the
+    streaming ingest applies the same lineage to a ``readStream``."""
     sigs = with_signature(
         with_length_cols(with_sha256(with_file_id(valid))), cfg)
-    return sigs.select(*SIGNATURE_COLS), invalid
+    return sigs.select(*SIGNATURE_COLS)
 
 
 def _distinct_reps(sigs: DataFrame, cfg: DedupConfig,
@@ -108,6 +114,80 @@ def _distinct_reps(sigs: DataFrame, cfg: DedupConfig,
     if n_rows is not None and n_rows <= 4_000_000:
         losers = F.broadcast(losers)
     return sigs.join(losers, "file_id", "left_anti")
+
+
+def plan_edges(sigs: DataFrame, reps: DataFrame,
+               cfg: DedupConfig) -> DataFrame:
+    """The one edge plan: exact edges over ``sigs`` ∪ near edges (LSH ->
+    Hamming -> Jaccard) over ``reps`` ∪ containment edges over ``reps``
+    when ``cfg.containment``, merged to one row per pair
+    (``merge_edges``). Lazy apart from the eager pair/candidate
+    checkpoints inside the near and containment branches. Batch search
+    and the resumable run both plan through here."""
+    edges = exact_edges(sigs, cfg).withColumn("gen", F.lit("exact"))
+    # The near stage runs at threshold 0 too: difPy's 'duplicates' is
+    # MSE == 0, which matches files that are not byte-identical
+    # (dif.py:450,461); here dist <= 0 admits pairs whose MinHash agrees
+    # on every lane (whitespace-normalized / shingle-set-equal files)
+    # that sha256 grouping alone would miss. The Hamming cut runs
+    # inside the band-bucket expansion (operators/lsh.py), so the pairs
+    # arrive narrow and pre-cut.
+    if cfg.containment:
+        # The LSH-pair and containment-candidate materializations are
+        # INDEPENDENT eager jobs over the same cached reps (each ends
+        # in a localCheckpoint before the final edge DAG references it
+        # several times). Submit both from their own thread so the
+        # scheduler interleaves their stages: each job's stage tails
+        # (the straggling last tasks of a shuffle) leave idle slots the
+        # other job fills. Sequential submission measured ~54% executor
+        # occupancy across the edge-planning phase at local[8]/1.2M;
+        # overlap costs nothing at low parallelism (the scheduler just
+        # queues) and lifts occupancy exactly where spare slots exist.
+        # The verify stages themselves stay LAZY here on purpose: the
+        # edge-merge action downstream runs the exact, Jaccard-verify
+        # and SA-verify subtrees as independent stages of ONE job, which
+        # the scheduler already overlaps — a round-6 variant that
+        # eagerly checkpointed each verified branch in its own thread
+        # measured +0.9 s at sf0.1 (three extra job barriers) and a
+        # wash at 1.2M, so it was reverted. Session-level job
+        # submission is thread-safe; both closures only read sigs/reps.
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_near = pool.submit(
+                lambda: jaccard_edges(
+                    dedup_pairs(candidate_pairs(reps, cfg)), reps, cfg))
+            # containment_edges manages its own transient storage (eager
+            # localCheckpoint + internal unpersist) — nothing to release
+            f_cont = pool.submit(containment_edges, reps, cfg)
+            near = f_near.result()
+            cont = f_cont.result().withColumn("gen", F.lit("contain"))
+        edges = edges.unionByName(near).unionByName(cont)
+    else:
+        near = jaccard_edges(dedup_pairs(candidate_pairs(reps, cfg)),
+                             reps, cfg)
+        edges = edges.unionByName(near)
+    return merge_edges(edges)
+
+
+def merge_edges(edges: DataFrame) -> DataFrame:
+    """One row per ``(src, dst)``: the smallest ``dist``, the ``kind``
+    that carries it, and the min ``gen`` when the input has that column
+    (the streaming ``edges/`` table has none). Batch search, the
+    resumable run and every streaming epoch merge through here.
+
+    min_by over (dist, kind) — NOT dist alone: a pair can carry the
+    same best distance under two kinds (byte-identical files are both
+    an exact edge and an all-lane near edge at dist 0.0), and min_by on
+    a tied ordering key is nondeterministic. A re-run, a resumed
+    ``edges`` stage or a replayed streaming epoch could then write a
+    different label and break the byte-identical rewrite. The struct
+    tie-break is total ('exact' < 'near' lexicographically — exact
+    wins the 0.0 tie, the right semantics)."""
+    aggs = [F.min("dist").alias("dist"),
+            F.min_by("kind", F.struct(F.col("dist"), F.col("kind")))
+            .alias("kind")]
+    if "gen" in edges.columns:
+        aggs.append(F.min("gen").alias("gen"))
+    return edges.groupBy("src", "dst").agg(*aggs)
 
 
 @dataclass
@@ -306,67 +386,11 @@ def search_clusters(sigs: DataFrame, invalid: DataFrame,
     n_sigs = sigs.count()  # materialize: ONE featurize pass feeds all branches
     build_end = datetime.now()
     log.info("search: %d signatures materialized", n_sigs)
-    edges = exact_edges(sigs, cfg).withColumn("gen", F.lit("exact"))
-
     reps = _distinct_reps(sigs, cfg, n_rows=n_sigs).persist()
     log.info("search: %d distinct-content representatives", reps.count())
 
-    persisted = [sigs, reps]
-    # The near stage runs at threshold 0 too: difPy's 'duplicates' is
-    # MSE == 0, which matches files that are not byte-identical
-    # (dif.py:450,461); here dist <= 0 admits pairs whose MinHash agrees
-    # on every lane (whitespace-normalized / shingle-set-equal files)
-    # that sha256 grouping alone would miss. The Hamming cut runs
-    # inside the band-bucket expansion (operators/lsh.py), so the pairs
-    # arrive narrow and pre-cut.
-    if cfg.containment:
-        # The LSH-pair and containment-candidate materializations are
-        # INDEPENDENT eager jobs over the same cached reps (each ends
-        # in a localCheckpoint before the final edge DAG references it
-        # several times). Submit both from their own thread so the
-        # scheduler interleaves their stages: each job's stage tails
-        # (the straggling last tasks of a shuffle) leave idle slots the
-        # other job fills. Sequential submission measured ~54% executor
-        # occupancy across the edge-planning phase at local[8]/1.2M;
-        # overlap costs nothing at low parallelism (the scheduler just
-        # queues) and lifts occupancy exactly where spare slots exist.
-        # The verify stages themselves stay LAZY here on purpose: the
-        # edge-merge action below runs the exact, Jaccard-verify and
-        # SA-verify subtrees as independent stages of ONE job, which
-        # the scheduler already overlaps — a round-6 variant that
-        # eagerly checkpointed each verified branch in its own thread
-        # measured +0.9 s at sf0.1 (three extra job barriers) and a
-        # wash at 1.2M, so it was reverted. Session-level job
-        # submission is thread-safe; both closures only read the
-        # already-materialized sigs/reps caches.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_near = pool.submit(
-                lambda: jaccard_edges(
-                    dedup_pairs(candidate_pairs(reps, cfg)), reps, cfg))
-            # containment_edges manages its own transient storage (eager
-            # localCheckpoint + internal unpersist) — nothing to release
-            f_cont = pool.submit(containment_edges, reps, cfg)
-            near = f_near.result()
-            cont = f_cont.result().withColumn("gen", F.lit("contain"))
-        edges = edges.unionByName(near).unionByName(cont)
-    else:
-        near = jaccard_edges(dedup_pairs(candidate_pairs(reps, cfg)),
-                             reps, cfg)
-        edges = edges.unionByName(near)
-
-    # min_by over (dist, kind) — NOT dist alone: a pair can carry the
-    # same best distance under two kinds (byte-identical files are both
-    # an exact edge and an all-lane near edge at dist 0.0), and min_by
-    # on a tied ordering key is nondeterministic, so replays/re-runs
-    # could flip the label. The struct tie-break is total ('exact' <
-    # 'near' lexicographically — exact wins ties, the right semantics).
-    edges = edges.groupBy("src", "dst").agg(
-        F.min("dist").alias("dist"),
-        F.min_by("kind", F.struct(F.col("dist"), F.col("kind")))
-        .alias("kind"),
-        F.min("gen").alias("gen"),
-    ).persist()
-    persisted.append(edges)
+    edges = plan_edges(sigs, reps, cfg).persist()
+    persisted = [sigs, reps, edges]
     timings["plan_edges"] = time.monotonic() - t0
 
     # Materialize the merged edge set explicitly: every upstream stage

@@ -58,13 +58,11 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from sparkdedup.config import DedupConfig
-from sparkdedup.functions.hashing import (with_file_id, with_length_cols,
-                                          with_sha256)
-from sparkdedup.functions.shingles import with_signature
+from sparkdedup.operators.exact import exact_edges
 from sparkdedup.operators.lsh import (candidate_pairs, dedup_pairs,
                                       explode_bands, history_pairs)
 from sparkdedup.operators.verify import jaccard_edges
-from sparkdedup.plans.pipeline import SIGNATURE_COLS
+from sparkdedup.plans.pipeline import featurize, merge_edges
 from sparkdedup.sources.files import INPUT_SCHEMA, split_invalid
 
 
@@ -82,10 +80,7 @@ def stream_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Streaming featurize: identical column lineage to the batch
     ``build_signatures`` (valid rows only — the invalid side-output of a
     stream belongs in its own sink, wired by ``incremental_dedup``)."""
-    valid, _ = split_invalid(files, cfg)
-    sigs = with_signature(
-        with_length_cols(with_sha256(with_file_id(valid))), cfg)
-    return sigs.select(*SIGNATURE_COLS)
+    return featurize(split_invalid(files, cfg)[0], cfg)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -432,34 +427,21 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
     epoch = f"ingest_batch={batch_id}"
     valid, invalid = split_invalid(batch, cfg)
     invalid.write.mode("overwrite").parquet(f"{invalid_dir}/{epoch}")
-    sigs = with_signature(
-        with_length_cols(with_sha256(with_file_id(valid))), cfg)
     # ONE featurize pass feeds every branch below
-    sigs = sigs.select(*SIGNATURE_COLS).persist()
+    sigs = featurize(valid, cfg).persist()
     try:
         if sigs.count() == 0:
             return
         vs_hist = _exact_history_edges(
             spark, sigs.select("file_id", "sha256"), sig_dir, batch_id)
         # edges WITHIN the batch: same star pattern as operators/exact.py
-        from sparkdedup.operators.exact import exact_edges
         edges = exact_edges(sigs, cfg)
         if vs_hist is not None:
             edges = edges.unionByName(vs_hist)
         if bands_dir is not None:
             edges = edges.unionByName(_near_dup_edges(
                 spark, sigs, cfg, sig_dir, bands_dir, batch_id))
-        # one row per unordered pair, best (dist, kind) wins — the same
-        # dedup the batch pipeline applies before its sink. The struct
-        # tie-break matters for IDEMPOTENCY: byte-identical files in one
-        # micro-batch are both an exact edge and an all-lane near edge
-        # at dist 0.0, and min_by on the tied dist alone could write a
-        # different 'kind' on epoch replay, breaking the byte-equivalent
-        # rewrite invariant ('exact' < 'near', so exact wins ties).
-        edges = edges.groupBy("src", "dst").agg(
-            F.min("dist").alias("dist"),
-            F.min_by("kind", F.struct(F.col("dist"), F.col("kind")))
-            .alias("kind"))
+        edges = merge_edges(edges)
         edges.write.mode("overwrite").parquet(f"{edges_dir}/{epoch}")
         if clusters_dir is not None:
             _merge_clusters(

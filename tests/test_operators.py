@@ -12,6 +12,7 @@ from sparkdedup.operators.lsh import (candidate_pairs, dedup_pairs,
                                       explode_bands)
 from sparkdedup.operators.ranking import lower_quality, match_counts, rank_clusters
 from sparkdedup.operators.verify import jaccard_edges
+from sparkdedup.plans.pipeline import merge_edges
 from sparkdedup.sources.files import REASON_NULL, REASON_UNSUPPORTED, split_invalid
 
 SCHEMA = ("repo string, path string, commit string, lang string, "
@@ -137,6 +138,26 @@ def test_verify_threshold_and_hamming(spark):
     paths = {(e["src"], e["dst"]) for e in edges}
     assert len(paths) >= 1
     assert all(0.0 <= e["dist"] <= cfg.threshold for e in edges)
+
+
+def test_merge_edges_tie_break(spark):
+    """One row per pair: min dist, the kind at that dist (ties go to
+    the smaller kind, so exact beats near at 0.0), min gen; no gen
+    column in, none out."""
+    schema = "src long, dst long, dist double, kind string, gen string"
+    edges = spark.createDataFrame(
+        [(1, 2, 0.0, "near", "band"), (1, 2, 0.0, "exact", "exact"),
+         (3, 4, 0.2, "near", "star"), (3, 4, 0.1, "contained", "contain")],
+        schema)
+    got = {(r["src"], r["dst"]): r for r in merge_edges(edges).collect()}
+    assert len(got) == 2
+    assert (got[1, 2]["dist"], got[1, 2]["kind"]) == (0.0, "exact")
+    assert (got[3, 4]["dist"], got[3, 4]["kind"]) == (0.1, "contained")
+    assert got[1, 2]["gen"] == "band" and got[3, 4]["gen"] == "contain"
+    no_gen = merge_edges(edges.drop("gen"))
+    assert no_gen.columns == ["src", "dst", "dist", "kind"]
+    assert sorted(map(tuple, no_gen.collect())) == [
+        (1, 2, 0.0, "exact"), (3, 4, 0.1, "contained")]
 
 
 def test_ranking_and_lower_quality(spark):

@@ -46,12 +46,24 @@ def test_resumable_containment_matches_plain(spark, tmp_path):
     res, _ = resumable_run(spark, cfg, files)
     plain = plain_run(spark, cfg, files)
     assert _clusters(res) == _clusters(plain)
-    res_edges = sorted((r["src"], r["dst"], r["kind"])
-                       for r in res.edges.collect())
-    plain_edges = sorted((r["src"], r["dst"], r["kind"])
-                         for r in plain.edges.collect())
+    cols = ["src", "dst", "dist", "kind", "gen"]
+    res_edges = sorted(map(tuple, res.edges.select(*cols).collect()))
+    plain_edges = sorted(map(tuple, plain.edges.select(*cols).collect()))
     assert res_edges == plain_edges
-    assert any(k == "contained" for _, _, k in plain_edges)
+    assert any(kind == "contained" for _, _, _, kind, _ in plain_edges)
+
+
+def test_resumed_stats_count_files(spark, tmp_path):
+    """stats() of a checkpointed run counts the files it searched, the
+    same as the plain pipeline over the same input."""
+    from sparkdedup.plans.pipeline import run as plain_run
+    cfg = _cfg(tmp_path)
+    files = files_table(spark, n=N, seed=42)
+    res, _ = resumable_run(spark, cfg, files)
+    got, want = res.stats(), plain_run(spark, cfg, files).stats()
+    assert got["total_files"] == want["total_files"]
+    assert (got["process"]["search"]["files_searched"]
+            == want["process"]["search"]["files_searched"])
 
 
 @pytest.mark.parametrize("kill_stage",
