@@ -61,6 +61,13 @@ SIGNATURE_FORMAT_VERSION = 2
 SIMILARITY_DUPLICATES = 0.0   # difPy 'duplicates' -> MSE 0 (dif.py:869-871)
 SIMILARITY_SIMILAR = 0.30     # difPy 'similar' -> MSE 5 (dif.py:872-874);
                               # here: max (1 - estimated Jaccard) to match.
+SIMHASH_HAM_MAX = 22          # cheap pre-verify cut on 64-bit SimHash,
+                              # valid up to SIMILARITY_SIMILAR (see
+                              # DedupConfig.effective_ham_cut). Measured
+                              # on the 20k fixture corpus: true pairs
+                              # (est-jaccard >= 0.7) have ham p99=17 /
+                              # max=22; junk medians ~30. 22 loses 0
+                              # true pairs, passes ~7% junk.
 
 
 @dataclass
@@ -86,11 +93,6 @@ class DedupConfig:
     # --- LSH ---
     num_bands: int = 32           # num_perm must divide evenly
     band_pair_cap: int = 64       # buckets above this emit star edges only
-    simhash_ham_max: int = 22     # cheap pre-verify cut on 64-bit SimHash.
-                                  # Measured on the 20k fixture corpus:
-                                  # true pairs (est-jaccard >= 0.7) have
-                                  # ham p99=17/max=22; junk medians ~30.
-                                  # 22 loses 0 true pairs, passes ~7% junk
 
     # --- execution (difPy `processes` / `chunksize`, dif.py:902-919) ---
     processes: int | None = None
@@ -177,7 +179,7 @@ class DedupConfig:
     def effective_ham_cut(self) -> int | None:
         """The SimHash Hamming pre-verify cut, or ``None`` (disabled).
 
-        ``simhash_ham_max`` (22) was measured for true pairs at
+        ``SIMHASH_HAM_MAX`` (22) was measured for true pairs at
         est-Jaccard >= 1 - SIMILARITY_SIMILAR — correct for the
         'duplicates' and 'similar' presets — but a user-supplied
         ``similarity`` above that admits pairs at lower Jaccard whose
@@ -188,7 +190,7 @@ class DedupConfig:
         the (sole) filter, so results are correct either way — this
         only changes which pairs pay the verify."""
         return None if self.threshold > SIMILARITY_SIMILAR \
-            else self.simhash_ham_max
+            else SIMHASH_HAM_MAX
 
     def params_hash(self) -> str:
         """Stable hash of all semantic parameters; keys stage lineage so a

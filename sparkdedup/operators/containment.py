@@ -89,8 +89,11 @@ def sa_contains(text: bytes, sa: np.ndarray, pattern: bytes) -> bool:
 
 
 def containment_candidates(sigs: DataFrame, cfg: DedupConfig,
-                           handles: list | None = None) -> DataFrame:
+                           handles: list) -> DataFrame:
     """Anchor-index join -> candidate (small_id, big_id) pairs.
+
+    The persisted ``rare`` anchor frame is appended to ``handles``; the
+    caller unpersists it once the candidates are materialized.
 
     Anchors are the uniform 1/``anchor_mod`` sample of shingle space
     (functions/shingles.py), so A inside B implies anchors(A) is a
@@ -137,14 +140,10 @@ def containment_candidates(sigs: DataFrame, cfg: DedupConfig,
     # join below — without the cache the anchor explode + df groupBy +
     # anti-join execute twice (measured round 4: the un-persisted shape
     # doubled the stage's shuffle bytes in the integrated pipeline).
-    # Registered with the caller's handles list when given;
-    # containment_edges (the normal entry) unpersists it itself as soon
-    # as the candidate set materializes — rare is only needed during
-    # candidate generation, and leaving it pinned leaked executor
-    # storage for callers that passed no handles (round-4 advice).
+    # containment_edges unpersists it as soon as the candidate set
+    # materializes: rare is only needed during candidate generation.
     rare = anchors.join(hot, "h", "left_anti").persist()
-    if handles is not None:
-        handles.append(rare)
+    handles.append(rare)
     # the TWO smallest rare anchors per small (one groupBy over the
     # small side; one output row per probing file). A pair must share
     # BOTH: the equi-join on h1 finds candidates, the composite-key
@@ -310,8 +309,7 @@ def anchor_subset_gate(cands: DataFrame, sigs: DataFrame,
             .drop("_sa", "_ba"))
 
 
-def containment_edges(sigs: DataFrame, cfg: DedupConfig,
-                      handles: list | None = None) -> DataFrame:
+def containment_edges(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Candidate gen -> subset gate -> suffix-array verify.
 
     The candidate set is materialized with an EAGER ``localCheckpoint``
@@ -322,16 +320,17 @@ def containment_edges(sigs: DataFrame, cfg: DedupConfig,
     The set is tiny (ids + lengths), and checkpointed RDD blocks are
     freed by Spark's ContextCleaner once the returned DataFrame is
     garbage-collected — unlike a CacheManager ``persist`` entry, which
-    leaked executor storage per call in long-lived sessions for callers
-    that passed no ``handles`` (round-4 advice). The ``rare`` anchor
-    frame persisted inside candidate generation is needed only until
-    this materialization, so it is unpersisted here unconditionally
-    (``handles`` remains accepted for API stability; nothing is left
-    behind for the caller to release)."""
+    leaked executor storage per call in long-lived sessions (round-4
+    advice). The ``rare`` anchor frame persisted inside candidate
+    generation is needed only until this materialization, so it is
+    unpersisted here, also when the materialization raises: nothing is
+    left behind for the caller to release."""
     rare_handles: list = []
-    cands = anchor_subset_gate(
-        containment_candidates(sigs, cfg, rare_handles), sigs, cfg)
-    cands = cands.localCheckpoint(eager=True)
-    for df in rare_handles:
-        df.unpersist()
+    try:
+        cands = anchor_subset_gate(
+            containment_candidates(sigs, cfg, rare_handles), sigs, cfg)
+        cands = cands.localCheckpoint(eager=True)
+    finally:
+        for df in rare_handles:
+            df.unpersist()
     return verify_containment(cands, sigs)

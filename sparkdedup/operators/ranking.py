@@ -1,4 +1,5 @@
-"""Quality ranking / representative selection + counts (difPy O16, O17).
+"""Quality ranking / representative selection (difPy O16; the O17
+match counts are ``SearchResult.stats()``, by edge ``kind``).
 
 Reference behavior: within each match group difPy re-opens every file and
 ranks by ``sum(image.size)`` (w+h) descending with path tiebreak
@@ -44,12 +45,3 @@ def lower_quality(ranked: DataFrame) -> DataFrame:
     return (ranked.filter(~F.col("is_keep"))
             .select("file_id", "repo", "path").distinct())
 
-
-def match_counts(edges: DataFrame) -> DataFrame:
-    """difPy duplicate_count / similar_count (O17, dif.py:566-597):
-    dist==0 pairs are duplicates, 0<dist<=tau are similar."""
-    return edges.agg(
-        F.sum((F.col("dist") == 0).cast("long")).alias("duplicate_pairs"),
-        F.sum((F.col("dist") > 0).cast("long")).alias("similar_pairs"),
-        F.count(F.lit(1)).alias("total_pairs"),
-    )

@@ -2,8 +2,11 @@
 
 Every stage materializes to a directory table under ``cfg.work_dir``
 keyed by the config's ``params_hash``; a killed job resumes by reading
-completed stages instead of recomputing them. The featurize stage —
-the expensive one at 10^12-file scale — is split into
+completed stages instead of recomputing them. The checkpointed run is
+the plain build + search with ``StageRunner`` wrapped around its
+stages: ``invalid`` and ``signatures`` here, then ``edges`` and
+``clusters`` through ``search_clusters``' ``stage`` hook. The featurize
+stage — the expensive one at 10^12-file scale — is split into
 ``num_ingest_buckets`` hash buckets of the input keyed by
 ``pmod(xxhash64(repo, path, commit), nb)``; each bucket commits
 independently with its own success marker and lineage row, so resume
@@ -32,10 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
-from sparkdedup.operators.components import connected_components
-from sparkdedup.operators.ranking import rank_clusters
-from sparkdedup.plans.pipeline import (SearchResult, _distinct_reps,
-                                       build_signatures, plan_edges)
+from sparkdedup.plans.pipeline import build_signatures, search_clusters
 from sparkdedup.sources.files import split_invalid
 
 
@@ -48,14 +48,24 @@ class StageInfo:
     detail: dict = field(default_factory=dict)
 
 
-class StageRunner:
-    """Materialize-or-resume runner for pipeline stages."""
+class KillSignal(Exception):
+    """Raised by tests to simulate a mid-job crash after stage k."""
 
-    def __init__(self, spark: SparkSession, cfg: DedupConfig):
+
+class StageRunner:
+    """Materialize-or-resume runner for pipeline stages.
+
+    ``stop_after`` names a stage to kill the job at: once that stage is
+    committed (now or by an earlier run), ``stage``/``bucketed_stage``
+    raise ``KillSignal`` — the T4 resume fixture."""
+
+    def __init__(self, spark: SparkSession, cfg: DedupConfig,
+                 stop_after: str | None = None):
         if not cfg.work_dir:
             raise ValueError("StageRunner requires cfg.work_dir")
         self.spark = spark
         self.cfg = cfg
+        self.stop_after = stop_after
         self.root = Path(cfg.work_dir) / cfg.params_hash()
         self.root.mkdir(parents=True, exist_ok=True)
         self.stages: list[StageInfo] = []
@@ -78,24 +88,28 @@ class StageRunner:
     def _done(self, path: Path) -> bool:
         return (path / "_SUCCESS").exists()
 
+    def _kill_point(self, name: str) -> None:
+        if self.stop_after == name:
+            raise KillSignal(f"killed after stage {name}")
+
     def stage(self, name: str, build) -> DataFrame:
         """Whole-stage granularity: compute+write once, read thereafter."""
         path = self.root / name
         t0 = time.monotonic()
         if self._done(path):
-            df = self.spark.read.parquet(str(path))
+            out = self.spark.read.parquet(str(path))
             self.stages.append(StageInfo(name, False, -1,
                                          time.monotonic() - t0))
-            return df
-        df = build()
-        df.write.mode("overwrite").parquet(str(path))
-        out = self.spark.read.parquet(str(path))
-        rows = out.count()
-        secs = time.monotonic() - t0
-        self.stages.append(StageInfo(name, True, rows, secs))
-        self._log_lineage({"stage": name, "granularity": "stage",
-                           "rows": rows, "seconds": round(secs, 3),
-                           "params": self.cfg.params_hash()})
+        else:
+            build().write.mode("overwrite").parquet(str(path))
+            out = self.spark.read.parquet(str(path))
+            rows = out.count()
+            secs = time.monotonic() - t0
+            self.stages.append(StageInfo(name, True, rows, secs))
+            self._log_lineage({"stage": name, "granularity": "stage",
+                               "rows": rows, "seconds": round(secs, 3),
+                               "params": self.cfg.params_hash()})
+        self._kill_point(name)
         return out
 
     def bucketed_stage(self, name: str, files: DataFrame, build
@@ -149,53 +163,27 @@ class StageRunner:
         self.stages.append(StageInfo(
             name, computed > 0, out.count(), time.monotonic() - t0,
             {"buckets_computed": computed, "buckets_skipped": skipped}))
+        self._kill_point(name)
         return out
-
-
-class KillSignal(Exception):
-    """Raised by tests to simulate a mid-job crash after stage k."""
 
 
 def resumable_run(spark: SparkSession, cfg: DedupConfig,
                   files: DataFrame, stop_after: str | None = None):
     """Checkpointed build+search. Returns (SearchResult, StageRunner).
-    Each stage wraps the call ``run`` makes (``build_signatures``,
-    ``plan_edges``, ``connected_components``) in ``StageRunner``
-    materialization, so a resumed run plans its edges the same way.
+
+    Commits the ``invalid`` split and the bucketed ``signatures``, then
+    runs ``search_clusters`` with ``StageRunner.stage`` as its stage
+    hook, so the ``edges`` and ``clusters`` stages commit too and a
+    resumed run searches, times and reports exactly like ``run``.
 
     ``stop_after`` kills the job right after the named stage commits —
     the T4 resume fixture. A rerun with the same work_dir + config
     resumes from the committed stages.
     """
-    runner = StageRunner(spark, cfg)
-
-    def _check(stage: str) -> None:
-        if stop_after == stage:
-            raise KillSignal(f"killed after stage {stage}")
-
+    runner = StageRunner(spark, cfg, stop_after=stop_after)
     valid, invalid_live = split_invalid(files, cfg)
     invalid = runner.stage("invalid", lambda: invalid_live)
-    _check("invalid")
-
-    def featurize(bucket_df: DataFrame) -> DataFrame:
-        # rows here are already valid; build_signatures' re-split is a no-op
-        return build_signatures(spark, cfg, bucket_df)[0]
-
-    sigs = runner.bucketed_stage("signatures", valid, featurize)
-    n_sigs = runner.stages[-1].rows
-    _check("signatures")
-
-    # reps stay uncached: the branches re-read the committed signatures
-    edges = runner.stage("edges", lambda: plan_edges(
-        sigs, _distinct_reps(sigs, cfg, n_rows=n_sigs), cfg))
-    _check("edges")
-
-    clusters = runner.stage("clusters",
-                            lambda: connected_components(edges))
-    _check("clusters")
-
-    ranked = rank_clusters(clusters,
-                           sigs.select("file_id", "repo", "path", "n_chars"))
-    res = SearchResult(cfg=cfg, edges=edges, clusters=clusters,
-                       ranked=ranked, invalid=invalid, _n_files=n_sigs)
-    return res, runner
+    # rows here are already valid; build_signatures' re-split is a no-op
+    sigs = runner.bucketed_stage(
+        "signatures", valid, lambda b: build_signatures(spark, cfg, b)[0])
+    return search_clusters(sigs, invalid, cfg, stage=runner.stage), runner

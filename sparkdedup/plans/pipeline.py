@@ -28,6 +28,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,30 +81,14 @@ def _distinct_reps(sigs: DataFrame, cfg: DedupConfig,
     """One representative row per sha256 group (scoped by repo when
     in_folder) — collapses exact-dup mass before the LSH shuffle.
 
-    The group-min window runs over a (file_id, sha256) projection so the
-    shuffle never moves content/MinHash payloads; the surviving ids then
-    hash-join back to the full rows (broadcast when small — Catalyst's
-    call)."""
-    keys = ["sha256"] + (["repo"] if cfg.in_folder else [])
-    # anti-join on the LOSERS (non-representative members of dup groups)
-    # instead of inner-joining the representative ids: losers are the
-    # strictly smaller side (only dup-group members beyond the first),
-    # so the wide signature rows never shuffle. The group-min runs as a
-    # groupBy + join back, NOT a window: the aggregate partial-combines
-    # map-side (a 10^7-copy group collapses to one row per map task
-    # before the shuffle, no single-task sort buffer) and its output
-    # has runtime stats at the shuffle boundary, so AQE can broadcast
-    # the small sides on its own. The 40 B/row projection keeps every
-    # exchange narrow.
-    slim = sigs.select("file_id", *keys)
-    groups = (slim.groupBy(*keys)
-              .agg(F.min("file_id").alias("_root"),
-                   F.count(F.lit(1)).alias("_n"))
-              .filter(F.col("_n") > 1)
-              .drop("_n"))
-    losers = (slim.join(groups, keys)
-              .filter(F.col("file_id") != F.col("_root"))
-              .select("file_id"))
+    The representatives are the rows that are no leaf of an exact star:
+    ``exact_edges`` already roots each duplicate group at its min id, so
+    its ``dst`` column IS the loser set, and the group-min aggregate is
+    stated once (operators/exact.py). Anti-joining the LOSERS instead of
+    inner-joining the representative ids keeps the wide signature rows
+    off the shuffle: losers are the strictly smaller side (only
+    dup-group members beyond the first)."""
+    losers = exact_edges(sigs, cfg).select(F.col("dst").alias("file_id"))
     # The anti-join broadcast is EXPLICIT when the corpus row count
     # (known from the materialize count) bounds the loser list well
     # under spark.driver.maxResultSize (4g, session.py): 4M ids is a
@@ -207,8 +192,8 @@ class SearchResult:
 
     def release(self) -> None:
         """Unpersist every DataFrame the search pinned (sigs, reps,
-        edges, the containment anchor index) — repeated searches in one
-        session must not accumulate executor storage."""
+        edges) — repeated searches in one session must not accumulate
+        executor storage."""
         for df in self._persisted:
             df.unpersist()
         self._persisted.clear()
@@ -370,39 +355,62 @@ class SearchResult:
 
 
 def search_clusters(sigs: DataFrame, invalid: DataFrame,
-                    cfg: DedupConfig) -> SearchResult:
+                    cfg: DedupConfig,
+                    stage: Callable[[str, Callable[[], DataFrame]],
+                                    DataFrame] | None = None
+                    ) -> SearchResult:
     """difPy search stage over a signature DataFrame.
 
     ``sigs`` is consumed by several branches (exact edges, LSH, the
     containment index, final ranking) — persist it here so the
     featurize UDF runs ONCE, mirroring difPy's build-once/search-many
     artifact (dif.py:61). Same for the sha256 representatives.
+
+    ``stage(name, build)`` runs the ``"edges"`` and ``"clusters"``
+    stages; the default just calls ``build()``. The resumable run
+    passes ``StageRunner.stage``, which commits each stage to disk or
+    reads it back, so a resumed run searches through this same body.
+    The reps are built inside the edges stage: a resume whose edges are
+    committed never computes them. If anything raises, every DataFrame
+    pinned so far is unpersisted before the error propagates.
     """
+    stage = stage or (lambda _name, build: build())
     timings: dict[str, float] = {}
-    t0 = time.monotonic()
     build_start = datetime.now()
+    persisted = [sigs.persist()]
+    try:
+        # materialize: ONE featurize pass feeds all branches
+        n_sigs = sigs.count()
+        build_end = datetime.now()
+        log.info("search: %d signatures materialized", n_sigs)
+        t0 = time.monotonic()
 
-    sigs = sigs.persist()
-    n_sigs = sigs.count()  # materialize: ONE featurize pass feeds all branches
-    build_end = datetime.now()
-    log.info("search: %d signatures materialized", n_sigs)
-    reps = _distinct_reps(sigs, cfg, n_rows=n_sigs).persist()
-    log.info("search: %d distinct-content representatives", reps.count())
+        def edges_build() -> DataFrame:
+            reps = _distinct_reps(sigs, cfg, n_rows=n_sigs).persist()
+            persisted.append(reps)
+            log.info("search: %d distinct-content representatives",
+                     reps.count())
+            return plan_edges(sigs, reps, cfg)
 
-    edges = plan_edges(sigs, reps, cfg).persist()
-    persisted = [sigs, reps, edges]
-    timings["plan_edges"] = time.monotonic() - t0
+        edges = stage("edges", edges_build).persist()
+        persisted.append(edges)
+        timings["plan_edges"] = time.monotonic() - t0
 
-    # Materialize the merged edge set explicitly: every upstream stage
-    # (band shuffle, Hamming/Jaccard verify, SA containment verify) runs
-    # HERE, so its wall-time is attributable separately from the CC
-    # rounds that follow (which then iterate over the cached edges).
-    t1 = time.monotonic()
-    n_edges = edges.count()
-    timings["materialize_edges"] = time.monotonic() - t1
-    t1 = time.monotonic()
-    clusters = connected_components(edges)
-    timings["connected_components"] = time.monotonic() - t1
+        # Materialize the merged edge set explicitly: every upstream
+        # stage (band shuffle, Hamming/Jaccard verify, SA containment
+        # verify) runs HERE, so its wall-time is attributable separately
+        # from the CC rounds that follow (which then iterate over the
+        # cached edges).
+        t1 = time.monotonic()
+        n_edges = edges.count()
+        timings["materialize_edges"] = time.monotonic() - t1
+        t1 = time.monotonic()
+        clusters = stage("clusters", lambda: connected_components(edges))
+        timings["connected_components"] = time.monotonic() - t1
+    except BaseException:
+        for df in persisted:
+            df.unpersist()
+        raise
     log.info("search: plan %.1fs, %d edges in %.1fs, "
              "connected components %.1fs", timings["plan_edges"],
              n_edges, timings["materialize_edges"],

@@ -95,24 +95,32 @@ def _snapshot_dir(path: str) -> str:
     return f"{path.rstrip('/')}_snapshot"
 
 
+def _numbered(spark: SparkSession, path: str, key: str) -> list:
+    """``[(n, Path)]`` of the ``<key>=<n>`` child directories of
+    ``path`` (Hadoop ``Path`` objects); children with another name or a
+    non-integer ``n`` are skipped, and a missing ``path`` lists as []."""
+    fs, hp = _hadoop_fs(spark, path)
+    if not fs.exists(hp):
+        return []
+    out = []
+    for st in fs.listStatus(hp):
+        name, _, n = st.getPath().getName().partition("=")
+        if name == key:
+            try:
+                out.append((int(n), st.getPath()))
+            except ValueError:
+                continue
+    return out
+
+
 def _latest_snapshot(spark: SparkSession, path: str) -> tuple[str | None, int]:
     """(leaf_path, upto) of the newest compaction snapshot for a log
     table, or (None, -1) when none exists."""
-    sdir = _snapshot_dir(path)
-    fs, hp = _hadoop_fs(spark, sdir)
-    if not fs.exists(hp):
-        return None, -1
-    best = -1
-    for st in fs.listStatus(hp):
-        name = st.getPath().getName()
-        if name.startswith("upto="):
-            try:
-                best = max(best, int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
+    best = max((n for n, _ in _numbered(spark, _snapshot_dir(path), "upto")),
+               default=-1)
     if best < 0:
         return None, -1
-    return f"{sdir}/upto={best}", best
+    return f"{_snapshot_dir(path)}/upto={best}", best
 
 
 def _read_log(spark: SparkSession, path: str) -> DataFrame | None:
@@ -206,21 +214,12 @@ def compact_logs(spark: SparkSession, out_dir: str,
         # newest epoch from the DIRECTORY listing, not the data rows:
         # an epoch with zero rows (no edges that batch) still exists as
         # a dir and is still the only epoch foreachBatch can replay
-        fs, hp = _hadoop_fs(spark, path)
-        epoch_dirs = []
-        if fs.exists(hp):
-            for st in fs.listStatus(hp):
-                name = st.getPath().getName()
-                if name.startswith("ingest_batch="):
-                    try:
-                        epoch_dirs.append(int(name.split("=", 1)[1]))
-                    except ValueError:
-                        continue
-        if not epoch_dirs:
+        epochs = _numbered(spark, path, "ingest_batch")
+        if not epochs:
             continue
-        _, prev_upto = _latest_snapshot(spark, path)
-        upto = max(epoch_dirs) - 1
-        if upto < 0 or upto <= prev_upto:
+        snaps = _numbered(spark, _snapshot_dir(path), "upto")
+        upto = max(n for n, _ in epochs) - 1
+        if upto < 0 or upto <= max((n for n, _ in snaps), default=-1):
             continue  # nothing new to fold
         keys = _COMPACT_KEYS[t]
         vals = [c for c in log.columns if c not in keys]
@@ -231,27 +230,14 @@ def compact_logs(spark: SparkSession, out_dir: str,
                 .select(*keys, *[F.col(f"_v.{c}") for c in ordered]))
         snap.write.mode("overwrite").parquet(
             f"{_snapshot_dir(path)}/upto={upto}")
-        # reclamation: folded epoch dirs, then superseded snapshots
-        if fs.exists(hp):
-            for st in fs.listStatus(hp):
-                name = st.getPath().getName()
-                if name.startswith("ingest_batch="):
-                    try:
-                        e = int(name.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if e <= upto:
-                        fs.delete(st.getPath(), True)
-        sfs, shp = _hadoop_fs(spark, _snapshot_dir(path))
-        for st in sfs.listStatus(shp):
-            name = st.getPath().getName()
-            if name.startswith("upto="):
-                try:
-                    e = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if e < upto:
-                    sfs.delete(st.getPath(), True)
+        # reclamation: folded epoch dirs, then the superseded snapshots
+        # (every one listed above is older than ``upto``)
+        fs, _ = _hadoop_fs(spark, path)
+        for n, epoch_dir in epochs:
+            if n <= upto:
+                fs.delete(epoch_dir, True)
+        for _, snap_dir in snaps:
+            fs.delete(snap_dir, True)
         done[t] = upto
     return done
 
@@ -329,6 +315,13 @@ def _near_dup_edges(spark: SparkSession, sigs: DataFrame, cfg: DedupConfig,
     return jaccard_edges(pairs, mh, cfg, pairs_materialized=True).drop("gen")
 
 
+def _latest_clusters(log: DataFrame) -> DataFrame:
+    """Latest-wins reduce of ``clusters/`` log rows: each file's
+    ``cluster_id`` from the newest epoch that wrote it."""
+    return (log.groupBy("file_id")
+            .agg(F.max_by("cluster_id", "ingest_batch").alias("cluster_id")))
+
+
 def _merge_clusters(spark: SparkSession, epoch_edges: DataFrame,
                     batch_id: int, clusters_dir: str) -> None:
     """Incremental connected-components merge (one epoch).
@@ -350,10 +343,7 @@ def _merge_clusters(spark: SparkSession, epoch_edges: DataFrame,
     # over every epoch directory ever written (round-4 verdict #4)
     clusters_hist = _history(spark, clusters_dir, batch_id)
     if clusters_hist is not None:
-        prior_all = (clusters_hist
-                     .groupBy("file_id")
-                     .agg(F.max_by("cluster_id", "ingest_batch")
-                          .alias("cluster_id")))
+        prior_all = _latest_clusters(clusters_hist)
         prior_sub = prior_all.join(touched, "file_id")
     else:
         prior_all = None
@@ -400,8 +390,7 @@ def current_clusters(spark: SparkSession, out_dir: str) -> DataFrame:
             errorClass="PATH_NOT_FOUND",
             messageParameters={
                 "path": f"{out_dir.rstrip('/')}/clusters"})
-    return (log.groupBy("file_id")
-            .agg(F.max_by("cluster_id", "ingest_batch").alias("cluster_id")))
+    return _latest_clusters(log)
 
 
 def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,

@@ -10,7 +10,7 @@ from sparkdedup.functions.shingles import with_signature
 from sparkdedup.operators.exact import exact_edges
 from sparkdedup.operators.lsh import (candidate_pairs, dedup_pairs,
                                       explode_bands)
-from sparkdedup.operators.ranking import lower_quality, match_counts, rank_clusters
+from sparkdedup.operators.ranking import lower_quality, rank_clusters
 from sparkdedup.operators.verify import jaccard_edges
 from sparkdedup.plans.pipeline import merge_edges
 from sparkdedup.sources.files import REASON_NULL, REASON_UNSUPPORTED, split_invalid
@@ -173,16 +173,6 @@ def test_ranking_and_lower_quality(spark):
     assert by_id[3]["rn"] == 2 and by_id[1]["rn"] == 3
     lq = lower_quality(rank_clusters(clusters, files)).collect()
     assert {r["file_id"] for r in lq} == {1, 3}
-
-
-def test_match_counts(spark):
-    edges = spark.createDataFrame(
-        [(1, 2, 0.0, "exact"), (1, 3, 0.1, "near"), (4, 5, 0.2, "near")],
-        "src long, dst long, dist double, kind string")
-    row = match_counts(edges).collect()[0]
-    assert row["duplicate_pairs"] == 1
-    assert row["similar_pairs"] == 2
-    assert row["total_pairs"] == 3
 
 
 def test_split_invalid_reasons(spark):

@@ -55,7 +55,8 @@ def test_resumable_containment_matches_plain(spark, tmp_path):
 
 def test_resumed_stats_count_files(spark, tmp_path):
     """stats() of a checkpointed run counts the files it searched, the
-    same as the plain pipeline over the same input."""
+    same as the plain pipeline over the same input, and reports the
+    same stage timings and filled duration blocks."""
     from sparkdedup.plans.pipeline import run as plain_run
     cfg = _cfg(tmp_path)
     files = files_table(spark, n=N, seed=42)
@@ -64,6 +65,26 @@ def test_resumed_stats_count_files(spark, tmp_path):
     assert got["total_files"] == want["total_files"]
     assert (got["process"]["search"]["files_searched"]
             == want["process"]["search"]["files_searched"])
+    assert (got["process"]["search"]["timings_sec"].keys()
+            == want["process"]["search"]["timings_sec"].keys())
+    assert got["process"]["build"]["duration"]
+    assert got["process"]["search"]["duration"]
+
+
+def test_failed_stage_releases_cache(spark, tmp_path):
+    """A search whose stage raises unpersists what it pinned: the
+    signatures do not stay cached behind the error."""
+    from sparkdedup.plans.pipeline import build_signatures, search_clusters
+
+    def failing(name, build):
+        raise KillSignal(f"killed at stage {name}")
+
+    cfg = _cfg(tmp_path)
+    sigs, invalid = build_signatures(spark, cfg,
+                                     files_table(spark, n=N, seed=42))
+    with pytest.raises(KillSignal):
+        search_clusters(sigs, invalid, cfg, stage=failing)
+    assert not sigs.is_cached
 
 
 @pytest.mark.parametrize("kill_stage",
