@@ -33,8 +33,8 @@ def _lane_agree(a: str, b: str) -> F.Column:
         F.lit(0), lambda acc, x: acc + x)
 
 
-def jaccard_edges(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig,
-                  pairs_materialized: bool = False) -> DataFrame:
+def jaccard_edges(pairs: DataFrame, sigs: DataFrame,
+                  cfg: DedupConfig) -> DataFrame:
     """MinHash-lane verification of candidate pairs; keeps pairs with
     ``dist = 1 - est_jaccard <= cfg.threshold``. Emits
     ``(src, dst, dist, kind='near', gen)``.
@@ -63,10 +63,9 @@ def jaccard_edges(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig,
     narrow (src, dst, gen — ~24 B/pair) and bounded by the bucket
     cap per band, so the materialization is tiny relative to the signature
     table at every scale; blocks are freed by the ContextCleaner when
-    the returned DataFrame is garbage-collected. A caller that already
-    materialized ``pairs`` (the streaming path, which reuses them for
-    its own history prune) passes ``pairs_materialized=True`` to skip
-    the redundant copy.
+    the returned DataFrame is garbage-collected. ``sigs`` may be a
+    union (the streaming batch ∪ history minhash): the id semi-join
+    pushes down through it onto each side's scan.
 
     A low-bit digest PRE-filter before this join was built and measured
     in round 4 and rejected: after the Hamming cut ~41% of surviving
@@ -74,8 +73,7 @@ def jaccard_edges(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig,
     digest join + survivor re-join cost ~3x the single exact join it
     was meant to shrink (600k files, same-session A/B).
     """
-    if not pairs_materialized:
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = pairs.localCheckpoint(eager=True)
     ids = (pairs.select(F.col("src").alias("file_id"))
            .unionByName(pairs.select(F.col("dst").alias("file_id")))
            .distinct())

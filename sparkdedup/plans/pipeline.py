@@ -274,8 +274,8 @@ class SearchResult:
         agg = self.edges.groupBy("kind", "gen" if "gen" in
                                  self.edges.columns else F.lit("-")).count()
         edge_rows = [r.asDict() for r in agg.collect()]
-        n_matched = self.clusters.count()
-        n_clusters = self.clusters.select("cluster_id").distinct().count()
+        n_matched, n_clusters = self.clusters.agg(
+            F.count(F.lit(1)), F.countDistinct("cluster_id")).first()
         n_invalid = self.invalid.count()
         inv_rows = self.invalid.limit(max_invalid_logs).collect()
         logs = {f"{r['repo']}/{r['path']}": r["reason"] for r in inv_rows}

@@ -19,13 +19,13 @@ this module is the Spark-native answer:
   - exact: sha256 join against the accumulated signature table's
     ``(file_id, sha256)`` projection, semi-joined to the batch's sha256
     set through a broadcast before the min-id representative groupBy;
-  - near (``near_dup=True``): the batch's LSH band keys join against an
-    accumulated ``bands`` table (band_id, band_hash, file_id, simhash)
-    — only ids+hashes ride the shuffle — via ``lsh.history_pairs``
-    (the batch band-expansion contract: bucket cap, star root, Hamming
-    cut), then the MinHash-lane verify. History is never re-featurized:
-    its bands and minhashes are read back from the tables this job
-    wrote.
+  - near (``near_dup=True``): the batch's LSH band keys join against
+    the history's band keys via ``lsh.history_pairs`` (the batch
+    band-expansion contract: bucket cap, star root, Hamming cut), then
+    the MinHash-lane verify. History is never re-featurized: its band
+    keys are ``explode_bands`` of the stored minhash (a JVM xxhash64
+    over lane slices), so the signature table is the only history
+    table, and each epoch reads it once for both edge kinds.
 * ``current_clusters`` — the cluster assignment is maintained
   INCREMENTALLY: each epoch contracts its new edges onto the prior
   cluster roots, runs connected components on that (small) contracted
@@ -42,7 +42,7 @@ duplicate rows are impossible — effectively-once table contents
 without a transactional format (on Iceberg/Delta the same seam becomes
 a MERGE keyed by the epoch id). Every HISTORY read is filtered to
 ``ingest_batch < batch_id``: a replay that finds its own prior
-partially-committed epoch on disk (e.g. a crash between the bands
+partially-committed epoch on disk (e.g. a crash between the signatures
 write and the checkpoint commit) never sees those rows as history, so
 the rewrite stays byte-equivalent (round-3 verdict "What's wrong #2").
 
@@ -165,24 +165,14 @@ def _history(spark: SparkSession, path: str, batch_id: int
     return log.filter(F.col("ingest_batch") < F.lit(int(batch_id)))
 
 
-#: per-table latest-wins keys for compaction (everything else rides in
-#: the value struct; ``ingest_batch`` leads the struct so ``max`` picks
-#: the newest epoch's row per key, deterministically)
-_COMPACT_KEYS = {
-    "clusters": ["file_id"],
-    "signatures": ["file_id"],
-    "bands": ["file_id", "band_id"],
-}
-
-
 def compact_logs(spark: SparkSession, out_dir: str,
-                 tables: tuple[str, ...] = ("clusters", "signatures",
-                                            "bands")) -> dict[str, int]:
+                 tables: tuple[str, ...] = ("clusters", "signatures")
+                 ) -> dict[str, int]:
     """Fold completed epoch directories of the log-structured streaming
     tables into one latest-wins SNAPSHOT each, bounding every per-epoch
     history read by |snapshot| + |tail| instead of the number of epochs
     ever ingested (round-4 verdict "What's missing #1": the clusters
-    log and signature/band tables grew one directory per micro-batch
+    log and signature table grew one directory per micro-batch
     forever, and ``current_clusters`` / ``_merge_clusters`` re-grouped
     the FULL log every epoch).
 
@@ -194,7 +184,7 @@ def compact_logs(spark: SparkSession, out_dir: str,
        can be re-presented after a crash; folding it would make its
        replay read its own rows through the snapshot;
     2. latest-wins-reduce all rows with ``ingest_batch <= upto`` per
-       ``_COMPACT_KEYS[T]`` (for append-only tables this is a pure
+       ``file_id`` (for the append-only signatures this is a pure
        file-count consolidation; for ``clusters`` it collapses
        superseded delta rows) and write ``T_snapshot/upto=<upto>``;
     3. delete the folded epoch directories and older snapshots — pure
@@ -221,13 +211,14 @@ def compact_logs(spark: SparkSession, out_dir: str,
         upto = max(n for n, _ in epochs) - 1
         if upto < 0 or upto <= max((n for n, _ in snaps), default=-1):
             continue  # nothing new to fold
-        keys = _COMPACT_KEYS[t]
-        vals = [c for c in log.columns if c not in keys]
-        ordered = ["ingest_batch"] + [c for c in vals if c != "ingest_batch"]
+        # ``ingest_batch`` leads the value struct, so ``max`` picks the
+        # newest epoch's row per file, deterministically
+        ordered = ["ingest_batch"] + [c for c in log.columns
+                                      if c not in ("file_id", "ingest_batch")]
         snap = (log.filter(F.col("ingest_batch") <= F.lit(upto))
-                .groupBy(*keys)
+                .groupBy("file_id")
                 .agg(F.max(F.struct(*ordered)).alias("_v"))
-                .select(*keys, *[F.col(f"_v.{c}") for c in ordered]))
+                .select("file_id", *[F.col(f"_v.{c}") for c in ordered]))
         snap.write.mode("overwrite").parquet(
             f"{_snapshot_dir(path)}/upto={upto}")
         # reclamation: folded epoch dirs, then the superseded snapshots
@@ -242,10 +233,9 @@ def compact_logs(spark: SparkSession, out_dir: str,
     return done
 
 
-def _exact_history_edges(spark: SparkSession, new: DataFrame, sig_dir: str,
-                         batch_id: int) -> DataFrame | None:
+def _exact_history_edges(new: DataFrame, sig_hist: DataFrame) -> DataFrame:
     """Exact edges from a micro-batch's ``(file_id, sha256)`` rows to
-    the strictly-earlier signature history, or None without history.
+    the strictly-earlier signature history ``sig_hist``.
 
     The history is read as its ``(file_id, sha256)`` projection and
     semi-joined to the batch's sha256 set (broadcast: a micro-batch is
@@ -255,10 +245,7 @@ def _exact_history_edges(spark: SparkSession, new: DataFrame, sig_dir: str,
     them, so pairing each new copy with the min-id member keeps
     components intact and the join linear (a 10^6-copy boilerplate sha
     would otherwise emit 10^6 edges per new copy)."""
-    sha_hist = _history(spark, sig_dir, batch_id)
-    if sha_hist is None:
-        return None
-    hist = (sha_hist.select("file_id", "sha256")
+    hist = (sig_hist.select("file_id", "sha256")
             .join(F.broadcast(new.select("sha256")), "sha256", "left_semi")
             .groupBy("sha256")
             .agg(F.min("file_id").alias("src")))
@@ -271,48 +258,27 @@ def _exact_history_edges(spark: SparkSession, new: DataFrame, sig_dir: str,
                     F.lit("exact").alias("kind")))
 
 
-def _near_dup_edges(spark: SparkSession, sigs: DataFrame, cfg: DedupConfig,
-                    sig_dir: str, bands_dir: str, batch_id: int) -> DataFrame:
+def _near_dup_edges(sigs: DataFrame, sig_hist: DataFrame | None,
+                    cfg: DedupConfig) -> DataFrame:
     """Near-dup edges for a micro-batch: within-batch LSH pairs plus
-    cross-batch pairs against the accumulated band-key table (both
-    narrow, Hamming-cut, deduped in one pass), verified by the same
-    MinHash-lane machinery as the batch pipeline."""
+    cross-batch pairs against the strictly-earlier signature history
+    ``sig_hist`` (both narrow, Hamming-cut, deduped in one pass),
+    verified by the same MinHash-lane machinery as the batch pipeline.
+
+    History is never re-featurized: its band keys are
+    ``explode_bands`` of its stored minhash (a JVM xxhash64 over lane
+    slices, no Python), and the verify reads its minhash from the same
+    rows. ``jaccard_edges`` semi-joins the batch ∪ history minhash to
+    the candidate-pair ids, and the optimizer pushes that semi-join
+    through the union onto the history scan, so the history rows no
+    pair references never reach the verify exchanges."""
     pairs = candidate_pairs(sigs, cfg)
-    bands_hist = _history(spark, bands_dir, batch_id)
-    if bands_hist is not None:
-        pairs = pairs.unionByName(
-            history_pairs(explode_bands(sigs, cfg), bands_hist, cfg))
-    pairs = dedup_pairs(pairs)
-    # MinHash for verification: batch side is in-memory; history side
-    # comes from the signature table (ids+minhash projection only) —
-    # featurize is never re-run on history. The history read is
-    # SEMI-JOIN-PRUNED to the ids the candidate pairs actually
-    # reference BEFORE the union/dedup: the accumulated table grows
-    # with corpus lifetime while a micro-batch's pairs touch a handful
-    # of historical files, so without the prune every epoch re-shuffled
-    # the entire 128-lane history through dropDuplicates — per-batch
-    # cost linear in corpus age, a scale-killer for the "never
-    # re-featurize history" claim (round-4 verdict "What's wrong #3").
-    # jaccard_edges prunes again internally (idempotent); this outer
-    # prune is what keeps the full-history rows out of the dedup
-    # exchange. ``pairs`` is consumed by the id projections here AND by
-    # jaccard_edges' spine, so it is materialized once up front (eager
-    # localCheckpoint, narrow rows — exchange reuse does NOT dedupe the
-    # diverging subtrees in practice; see jaccard_edges' docstring) and
-    # jaccard_edges is told not to checkpoint again.
-    pairs = pairs.localCheckpoint(eager=True)
-    mh_batch = sigs.select("file_id", "minhash")
-    sig_hist = _history(spark, sig_dir, batch_id)
+    mh = sigs.select("file_id", "minhash")
     if sig_hist is not None:
-        pair_ids = (pairs.select(F.col("src").alias("file_id"))
-                    .unionByName(pairs.select(F.col("dst").alias("file_id")))
-                    .distinct())
-        mh_hist = (sig_hist.select("file_id", "minhash")
-                   .join(pair_ids, "file_id", "left_semi"))
-        mh = mh_batch.unionByName(mh_hist).dropDuplicates(["file_id"])
-    else:
-        mh = mh_batch
-    return jaccard_edges(pairs, mh, cfg, pairs_materialized=True).drop("gen")
+        pairs = pairs.unionByName(history_pairs(
+            explode_bands(sigs, cfg), explode_bands(sig_hist, cfg), cfg))
+        mh = mh.unionByName(sig_hist.select("file_id", "minhash"))
+    return jaccard_edges(dedup_pairs(pairs), mh, cfg).drop("gen")
 
 
 def _latest_clusters(log: DataFrame) -> DataFrame:
@@ -394,15 +360,14 @@ def current_clusters(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
-                 sig_dir: str, edges_dir: str, invalid_dir: str,
-                 bands_dir: str | None = None,
-                 clusters_dir: str | None = None,
+                 out_dir: str, near_dup: bool = False,
                  compact_every: int = 0) -> None:
-    """foreachBatch body: featurize once, emit exact (and optionally
-    near) dup edges vs (pruned, strictly-earlier) history + within the
-    batch, merge the cluster delta, append signatures/bands. Every
-    write targets ``ingest_batch=<epoch>`` with overwrite — replays of
-    the same epoch are idempotent.
+    """foreachBatch body: featurize once, read the strictly-earlier
+    signature history once, emit exact (and with ``near_dup`` near) dup
+    edges vs that history + within the batch, merge the cluster delta,
+    append the signatures. Every write targets ``ingest_batch=<epoch>``
+    under ``out_dir`` with overwrite — replays of the same epoch are
+    idempotent.
 
     With ``compact_every=k``, every k-th epoch ends by folding the log
     tables into their latest-wins snapshots (``compact_logs``). Running
@@ -413,37 +378,31 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
     or the tail, and a repeat compaction call is a no-op
     (``upto <= prev_upto``)."""
     spark = batch.sparkSession
+    base = out_dir.rstrip("/")
     epoch = f"ingest_batch={batch_id}"
     valid, invalid = split_invalid(batch, cfg)
-    invalid.write.mode("overwrite").parquet(f"{invalid_dir}/{epoch}")
+    invalid.write.mode("overwrite").parquet(f"{base}/invalid/{epoch}")
     # ONE featurize pass feeds every branch below
     sigs = featurize(valid, cfg).persist()
     try:
         if sigs.count() == 0:
             return
-        vs_hist = _exact_history_edges(
-            spark, sigs.select("file_id", "sha256"), sig_dir, batch_id)
+        sig_hist = _history(spark, f"{base}/signatures", batch_id)
         # edges WITHIN the batch: same star pattern as operators/exact.py
         edges = exact_edges(sigs, cfg)
-        if vs_hist is not None:
-            edges = edges.unionByName(vs_hist)
-        if bands_dir is not None:
-            edges = edges.unionByName(_near_dup_edges(
-                spark, sigs, cfg, sig_dir, bands_dir, batch_id))
-        edges = merge_edges(edges)
-        edges.write.mode("overwrite").parquet(f"{edges_dir}/{epoch}")
-        if clusters_dir is not None:
-            _merge_clusters(
-                spark, spark.read.parquet(f"{edges_dir}/{epoch}"),
-                batch_id, clusters_dir)
-        if bands_dir is not None:
-            (explode_bands(sigs, cfg)
-             .write.mode("overwrite").parquet(f"{bands_dir}/{epoch}"))
-        sigs.write.mode("overwrite").parquet(f"{sig_dir}/{epoch}")
+        if sig_hist is not None:
+            edges = edges.unionByName(_exact_history_edges(
+                sigs.select("file_id", "sha256"), sig_hist))
+        if near_dup:
+            edges = edges.unionByName(_near_dup_edges(sigs, sig_hist, cfg))
+        merge_edges(edges).write.mode("overwrite").parquet(
+            f"{base}/edges/{epoch}")
+        _merge_clusters(spark, spark.read.parquet(f"{base}/edges/{epoch}"),
+                        batch_id, f"{base}/clusters")
+        sigs.write.mode("overwrite").parquet(f"{base}/signatures/{epoch}")
         if compact_every > 0 and batch_id > 0 \
                 and batch_id % compact_every == 0:
-            # sig_dir is always "<out_dir>/signatures" (incremental_dedup)
-            compact_logs(spark, sig_dir.rsplit("/", 1)[0])
+            compact_logs(spark, base)
     finally:
         sigs.unpersist()
 
@@ -460,8 +419,10 @@ def incremental_dedup(spark: SparkSession, cfg: DedupConfig,
     ``trigger_available_now`` the query drains everything currently in
     ``source_path`` and stops — the batch-boundary mode used by tests
     and backfills; without it the query runs continuously.
-    ``near_dup=True`` additionally maintains the LSH band-key table and
-    emits near-dup edges across batches without re-featurizing history.
+    ``near_dup=True`` additionally emits near-dup edges within each
+    batch and against history, with the history's band keys derived
+    from its stored minhash — no epoch re-featurizes history, and the
+    history is the signature table whichever ``near_dup`` wrote it.
     ``compact_every=k`` folds the log tables into latest-wins snapshots
     after every k-th epoch (``compact_logs``), bounding history reads
     by |snapshot| + |tail| for unbounded ingests; 0 (default) leaves
@@ -471,28 +432,24 @@ def incremental_dedup(spark: SparkSession, cfg: DedupConfig,
     per epoch and no sub-partitions): ``signatures/``, ``edges/`` (exact
     AND near rows, one per unordered pair, ``kind`` distinguishes),
     ``clusters/`` (per-epoch deltas; read via ``current_clusters``),
-    ``bands/`` (near_dup only), ``invalid/``, ``_checkpoint/`` (Spark
-    streaming offsets). ``out_dir`` may be any Hadoop-FS URI.
+    ``invalid/``, ``_checkpoint/`` (Spark streaming offsets). ``out_dir``
+    may be any Hadoop-FS URI.
 
-    An ``out_dir`` written by an earlier version, whose signature epochs
-    were sub-partitioned by a sha256 prefix, cannot be resumed: the
-    history read over old and new epoch directories fails with Spark's
+    An ``out_dir`` written by an earlier version may also hold a
+    ``bands/`` table (and ``bands_snapshot/``) of stored band keys; no
+    epoch reads it any more, so it resumes as is and those directories
+    can be deleted. One whose signature epochs were sub-partitioned by
+    a sha256 prefix cannot be resumed: the history read over old and
+    new epoch directories fails with Spark's
     ``CONFLICTING_PARTITION_COLUMN_NAMES``. Re-ingest into a fresh
     ``out_dir`` instead.
     """
-    base = out_dir.rstrip("/")
-    sig_dir = f"{base}/signatures"
-    edges_dir = f"{base}/edges"
-    invalid_dir = f"{base}/invalid"
-    clusters_dir = f"{base}/clusters"
-    bands_dir = f"{base}/bands" if near_dup else None
     files = read_file_stream(spark, source_path, max_files_per_trigger)
-
     writer = (files.writeStream
               .foreachBatch(lambda b, eid: _merge_batch(
-                  b, eid, cfg, sig_dir, edges_dir, invalid_dir, bands_dir,
-                  clusters_dir, compact_every))
-              .option("checkpointLocation", f"{base}/_checkpoint"))
+                  b, eid, cfg, out_dir, near_dup, compact_every))
+              .option("checkpointLocation",
+                      f"{out_dir.rstrip('/')}/_checkpoint"))
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

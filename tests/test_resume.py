@@ -71,6 +71,17 @@ def test_resumed_stats_count_files(spark, tmp_path):
     assert got["process"]["search"]["duration"]
 
 
+def test_checkpointed_build_span_covers_signatures(spark, tmp_path):
+    """A fresh checkpointed run's build duration spans its committed
+    stages, so it is at least as long as the featurize stage inside it."""
+    res, runner = resumable_run(spark, _cfg(tmp_path),
+                                files_table(spark, n=N, seed=42))
+    sig_stage = next(s for s in runner.stages if s.name == "signatures")
+    assert sig_stage.computed
+    build = res.stats()["process"]["build"]["duration"]
+    assert build["seconds_elapsed"] >= sig_stage.seconds
+
+
 def test_failed_stage_releases_cache(spark, tmp_path):
     """A search whose stage raises unpersists what it pinned: the
     signatures do not stay cached behind the error."""

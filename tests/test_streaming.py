@@ -79,8 +79,9 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
 
 def test_incremental_near_dup_across_batches(spark, tmp_path):
     """near_dup=True: batch 2 contains a near-duplicate (not exact) of a
-    batch-1 file; the near edge must be found via the accumulated band
-    table + signature minhashes — batch 1 is never re-featurized."""
+    batch-1 file; the near edge must be found via the band keys and
+    minhashes of the signature table — batch 1 is never re-featurized
+    and no second band-key table is written."""
     cfg = DedupConfig(similarity="similar")
     src = tmp_path / "incoming"
     out = tmp_path / "out"
@@ -116,10 +117,34 @@ def test_incremental_near_dup_across_batches(spark, tmp_path):
     assert frozenset((ids["z.py"], ids["z2.py"])) in near
     # the unrelated file never pairs
     assert not any(ids["y.py"] in p for p in near)
-    # band table accumulated per epoch
+    # band keys derive from the signature table: no bands/ is written
     import os
-    assert any(p.startswith("ingest_batch=")
-               for p in os.listdir(str(out / "bands")))
+    assert not os.path.exists(str(out / "bands"))
+
+
+def test_near_dup_finds_history_ingested_without_it(spark, tmp_path):
+    """Epoch 0 runs with near_dup=False, epoch 1 with near_dup=True: the
+    history's band keys come from its signature rows, so the near edge
+    from the epoch-1 file to its epoch-0 near-duplicate is found."""
+    cfg = DedupConfig(similarity="similar")
+    src, out = tmp_path / "incoming", tmp_path / "out"
+    base = ("def compute(a, b):\n"
+            "    return a * b + a - b  # some shared logic here\n") * 4
+    epochs = [[("r0", "x.py", "c0", "python", base)],
+              [("r1", "x2.py", "c1", "python",
+                base.replace("shared logic", "shared logik"))]]
+    for i, rows in enumerate(epochs):
+        _write_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
+                     str(src / f"b{i}"))
+        _await(incremental_dedup(spark, cfg, str(src / "*"), str(out),
+                                 near_dup=i == 1))
+    ids = {r["path"]: r["file_id"] for r in spark.read.parquet(
+        str(out / "signatures")).select("path", "file_id").collect()}
+    edges = spark.read.parquet(str(out / "edges")).collect()
+    assert [(e["src"], e["dst"], e["kind"], e["ingest_batch"])
+            for e in edges] == [(min(ids["x.py"], ids["x2.py"]),
+                                 max(ids["x.py"], ids["x2.py"]), "near", 1)]
+    assert 0.0 < edges[0]["dist"] <= cfg.threshold
 
 
 def test_incremental_dedup_uri_out_dir(spark, tmp_path):
@@ -174,17 +199,12 @@ def test_stream_signatures_matches_batch(spark, tmp_path):
 def test_replay_same_epoch_is_idempotent(spark, tmp_path):
     """Round-3 verdict "What's wrong #2": foreachBatch is at-least-once,
     so an epoch can be re-presented after a PRIOR ATTEMPT already wrote
-    its signatures/bands. The replay must not read its own rows as
+    its signatures. The replay must not read its own rows as
     history (every history read filters ingest_batch < batch_id) — the
     rewritten epoch's edge output must be byte-identical."""
     from sparkdedup.streaming.ingest import _merge_batch
     cfg = DedupConfig(similarity="similar")
-    out = tmp_path / "out"
-    dirs = dict(sig_dir=str(out / "signatures"),
-                edges_dir=str(out / "edges"),
-                invalid_dir=str(out / "invalid"),
-                bands_dir=str(out / "bands"),
-                clusters_dir=str(out / "clusters"))
+    out = str(tmp_path / "out")
     base = ("def compute(a, b):\n"
             "    return a * b + a - b  # some shared logic here\n") * 4
     b0 = spark.createDataFrame(
@@ -193,19 +213,19 @@ def test_replay_same_epoch_is_idempotent(spark, tmp_path):
         [("r2", "x2.py", "c3", "python",
           base.replace("shared logic", "shared logik")),
          ("r2", "x3.py", "c4", "python", base)], INPUT_SCHEMA)
-    _merge_batch(b0, 0, cfg, **dirs)
+    _merge_batch(b0, 0, cfg, out, near_dup=True)
     # first attempt of epoch 1 commits EVERYTHING except the streaming
     # checkpoint (the worst-case crash window), then the epoch replays
-    _merge_batch(b1, 1, cfg, **dirs)
+    _merge_batch(b1, 1, cfg, out, near_dup=True)
     first = sorted(map(tuple, spark.read.parquet(
-        f"{dirs['edges_dir']}/ingest_batch=1").collect()))
+        f"{out}/edges/ingest_batch=1").collect()))
     assert first, "expected cross+within edges in epoch 1"
-    _merge_batch(b1, 1, cfg, **dirs)   # replay
+    _merge_batch(b1, 1, cfg, out, near_dup=True)   # replay
     second = sorted(map(tuple, spark.read.parquet(
-        f"{dirs['edges_dir']}/ingest_batch=1").collect()))
+        f"{out}/edges/ingest_batch=1").collect()))
     assert first == second
     # clusters delta must replay identically too
-    cl = spark.read.parquet(f"{dirs['clusters_dir']}/ingest_batch=1")
+    cl = spark.read.parquet(f"{out}/clusters/ingest_batch=1")
     assert cl.groupBy("file_id").count().filter("count > 1").count() == 0
 
 
@@ -301,20 +321,16 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
     check (a) the cross-batch near edge is still found (output
     unchanged) and (b) the optimized plan reads the history signatures
     UNDER a semi-join on the candidate-pair ids, so non-candidate rows
-    never reach the dedup/verify exchanges."""
+    never reach the verify exchanges."""
     from sparkdedup.plans.pipeline import SIGNATURE_COLS
     from sparkdedup.sources.files import split_invalid
     from sparkdedup.functions.hashing import (with_file_id,
                                               with_length_cols, with_sha256)
     from sparkdedup.functions.shingles import with_signature
-    from sparkdedup.streaming.ingest import _merge_batch, _near_dup_edges
+    from sparkdedup.streaming.ingest import (_history, _merge_batch,
+                                            _near_dup_edges)
     cfg = DedupConfig(similarity="similar")
-    out = tmp_path / "out"
-    dirs = dict(sig_dir=str(out / "signatures"),
-                edges_dir=str(out / "edges"),
-                invalid_dir=str(out / "invalid"),
-                bands_dir=str(out / "bands"),
-                clusters_dir=str(out / "clusters"))
+    out = str(tmp_path / "out")
     base = ("def compute(a, b):\n"
             "    return a * b + a - b  # some shared logic here\n") * 4
     for epoch in range(3):   # multi-epoch history, mostly non-candidates
@@ -323,7 +339,7 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
         if epoch == 0:
             rows.append(("r0", "x.py", "c", "python", base))
         _merge_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
-                     epoch, cfg, **dirs)
+                     epoch, cfg, out, near_dup=True)
     batch = spark.createDataFrame(
         [("r9", "x2.py", "c9", "python",
           base.replace("shared logic", "shared logik"))], INPUT_SCHEMA)
@@ -331,17 +347,16 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
     sigs = with_signature(
         with_length_cols(with_sha256(with_file_id(valid))),
         cfg).select(*SIGNATURE_COLS)
-    e = _near_dup_edges(spark, sigs, cfg, dirs["sig_dir"],
-                        dirs["bands_dir"], 3)
+    e = _near_dup_edges(sigs, _history(spark, f"{out}/signatures", 3), cfg)
     plan = e._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("LeftSemi") >= 2        # history + verify prunes
+    assert plan.count("LeftSemi") >= 2        # pair-id prune, both sides
     # the history SIGNATURES relation is the wide scan carrying sha256;
     # it must sit under a pair-id semi-join so non-candidate history
-    # rows never reach the minhash dedup/verify exchanges
+    # rows never reach the minhash verify exchanges
     assert _ancestors_contain(plan, ("Relation [", "sha256"), "LeftSemi"), \
         "history signature scan must sit under the pair-id semi-join"
     rows_out = e.collect()
-    all_sigs = spark.read.parquet(dirs["sig_dir"])
+    all_sigs = spark.read.parquet(f"{out}/signatures")
     ids = {r["path"]: r["file_id"]
            for r in all_sigs.select("path", "file_id").collect()}
     x2 = sigs.select("file_id").collect()[0][0]
@@ -360,20 +375,17 @@ def test_exact_history_read_is_pruned(spark, tmp_path):
     from sparkdedup.functions.hashing import (with_file_id,
                                               with_length_cols, with_sha256)
     from sparkdedup.functions.shingles import with_signature
-    from sparkdedup.streaming.ingest import _exact_history_edges, _merge_batch
+    from sparkdedup.streaming.ingest import (_exact_history_edges, _history,
+                                            _merge_batch)
     cfg = DedupConfig()
-    out = tmp_path / "out"
-    dirs = dict(sig_dir=str(out / "signatures"),
-                edges_dir=str(out / "edges"),
-                invalid_dir=str(out / "invalid"),
-                clusters_dir=str(out / "clusters"))
+    out = str(tmp_path / "out")
     same = "def chain(): return 'identical content across epochs'\n" * 3
     for epoch in range(2):   # one copy of ``same`` per epoch + non-matches
         rows = [(f"r{epoch}", f"u{epoch}_{i}.py", "c", "python",
                  f"unrelated content {epoch} {i} " * 20) for i in range(3)]
         rows.append((f"r{epoch}", f"s{epoch}.py", "c", "python", same))
         _merge_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
-                     epoch, cfg, **dirs)
+                     epoch, cfg, out)
     batch = spark.createDataFrame(
         [("r9", "s9.py", "c9", "python", same),
          ("r9", "new.py", "c9", "python", "brand new content " * 20)],
@@ -382,8 +394,8 @@ def test_exact_history_read_is_pruned(spark, tmp_path):
     sigs = with_signature(
         with_length_cols(with_sha256(with_file_id(valid))),
         cfg).select(*SIGNATURE_COLS)
-    e = _exact_history_edges(spark, sigs.select("file_id", "sha256"),
-                             dirs["sig_dir"], 2)
+    e = _exact_history_edges(sigs.select("file_id", "sha256"),
+                             _history(spark, f"{out}/signatures", 2))
     qe = e._jdf.queryExecution()
     plan = qe.optimizedPlan().toString()
     assert _ancestors_contain(plan, ("Relation [", "sha256"),
@@ -400,7 +412,7 @@ def test_exact_history_read_is_pruned(spark, tmp_path):
         "the batch's sha256 set must be the broadcast side"
     assert not {"minhash", "content", "anchors"} & {
         f.split(":")[0] for f in scans[0].split(",")}, scans[0]
-    hist = spark.read.parquet(dirs["sig_dir"])
+    hist = spark.read.parquet(f"{out}/signatures")
     ids = {r["path"]: r["file_id"]
            for r in hist.select("path", "file_id").collect()}
     new_id = sigs.filter(F.col("path") == "s9.py").first()["file_id"]
@@ -438,8 +450,8 @@ def test_compaction_bounds_history_and_preserves_semantics(spark, tmp_path):
     done = compact_logs(spark, str(out))
     # epochs 0..1 folded (the newest epoch is never folded: it is the
     # only one foreachBatch can replay after a crash)
-    assert done == {"clusters": 1, "signatures": 1, "bands": 1}
-    for t in ("clusters", "signatures", "bands"):
+    assert done == {"clusters": 1, "signatures": 1}
+    for t in ("clusters", "signatures"):
         left = [p for p in os.listdir(str(out / t))
                 if p.startswith("ingest_batch=")]
         assert left == ["ingest_batch=2"], (t, left)
@@ -474,7 +486,7 @@ def test_compaction_bounds_history_and_preserves_semantics(spark, tmp_path):
     assert got == batch_cc
     # a second compaction folds the tail too and stays consistent
     done2 = compact_logs(spark, str(out))
-    assert done2 == {"clusters": 3, "signatures": 3, "bands": 3}
+    assert done2 == {"clusters": 3, "signatures": 3}
     assert not os.path.isdir(str(out / "clusters_snapshot" / "upto=1"))
     got2 = {r["file_id"]: r["cluster_id"]
             for r in current_clusters(spark, str(out)).collect()}
@@ -505,7 +517,7 @@ def test_auto_compaction_every_k_epochs(spark, tmp_path):
                      str(src / f"b{i}"))
         _await(incremental_dedup(spark, cfg, str(src / "*"), str(out),
                                  near_dup=True, compact_every=2))
-    for t in ("clusters", "signatures", "bands"):
+    for t in ("clusters", "signatures"):
         left = sorted(p for p in os.listdir(str(out / t))
                       if p.startswith("ingest_batch="))
         assert left == ["ingest_batch=2", "ingest_batch=3"], (t, left)
@@ -557,8 +569,7 @@ def test_near_dup_history_cap_emits_cross_star(spark, tmp_path):
         family_ids = {ids[f"f{i}.py"] for i in range(5)}
         assert len({clusters[cap][f] for f in family_ids}) == 1
         assert ids["lonely.py"] not in clusters[cap]
-        bands = spark.read.parquet(str(out / "bands"))
-        hist = bands.filter(F.col("ingest_batch") == 0)
+        hist = explode_bands(sigs.filter(F.col("ingest_batch") == 0), cfg)
         probe = sigs.filter(F.col("path") == "f4.py")
         gens = {r["gen"] for r in history_pairs(
             explode_bands(probe, cfg), hist, cfg).collect()}
