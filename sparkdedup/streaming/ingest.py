@@ -16,9 +16,10 @@ this module is the Spark-native answer:
   featurized once, appended to the ``signatures`` table, and dup edges
   are emitted for collisions WITHIN the batch and AGAINST history:
 
-  - exact: sha256 join against the accumulated signature table's
-    ``(file_id, sha256)`` projection, semi-joined to the batch's sha256
-    set through a broadcast before the min-id representative groupBy;
+  - exact: the batch operator ``exact_edges`` over the batch's
+    ``(file_id, sha256[, repo])`` rows plus one min-id history row per
+    key the batch holds (the history's key projection, semi-joined to
+    a broadcast of the batch's keys before the groupBy);
   - near (``near_dup=True``): the batch's LSH band keys join against
     the history's band keys via ``lsh.history_pairs`` (the batch
     band-expansion contract: bucket cap, star root, Hamming cut), then
@@ -27,12 +28,12 @@ this module is the Spark-native answer:
     over lane slices), so the signature table is the only history
     table, and each epoch reads it once for both edge kinds.
 * ``current_clusters`` — the cluster assignment is maintained
-  INCREMENTALLY: each epoch contracts its new edges onto the prior
-  cluster roots, runs connected components on that (small) contracted
-  graph only, and writes a per-epoch DELTA of changed/new rows to the
-  log-structured ``clusters/`` table (latest epoch wins per file). The
-  min-label invariant makes this equal to a batch CC over all edges
-  ever seen — no epoch ever recomputes history.
+  INCREMENTALLY: each epoch adds one edge from every touched file to
+  its prior cluster root, runs the batch ``connected_components`` on
+  that (small) graph only, and writes a per-epoch DELTA of changed/new
+  rows to the log-structured ``clusters/`` table (latest epoch wins per
+  file). The min-label invariant makes this equal to a batch CC over
+  all edges ever seen — no epoch ever recomputes history.
 
 Write idempotency: every sink is written under an
 ``ingest_batch=<epoch>`` subdirectory with ``mode("overwrite")``.
@@ -165,6 +166,18 @@ def _history(spark: SparkSession, path: str, batch_id: int
     return log.filter(F.col("ingest_batch") < F.lit(int(batch_id)))
 
 
+def _latest(log: DataFrame) -> DataFrame:
+    """Latest-wins reduce of a log table: per ``file_id``, the row from
+    the newest epoch that wrote it, as ``(file_id, ingest_batch, …)``.
+    ``ingest_batch`` leads the value struct, so ``max`` picks that row
+    deterministically."""
+    ordered = ["ingest_batch"] + [c for c in log.columns
+                                  if c not in ("file_id", "ingest_batch")]
+    return (log.groupBy("file_id")
+            .agg(F.max(F.struct(*ordered)).alias("_v"))
+            .select("file_id", *[F.col(f"_v.{c}") for c in ordered]))
+
+
 def compact_logs(spark: SparkSession, out_dir: str,
                  tables: tuple[str, ...] = ("clusters", "signatures")
                  ) -> dict[str, int]:
@@ -211,16 +224,9 @@ def compact_logs(spark: SparkSession, out_dir: str,
         upto = max(n for n, _ in epochs) - 1
         if upto < 0 or upto <= max((n for n, _ in snaps), default=-1):
             continue  # nothing new to fold
-        # ``ingest_batch`` leads the value struct, so ``max`` picks the
-        # newest epoch's row per file, deterministically
-        ordered = ["ingest_batch"] + [c for c in log.columns
-                                      if c not in ("file_id", "ingest_batch")]
-        snap = (log.filter(F.col("ingest_batch") <= F.lit(upto))
-                .groupBy("file_id")
-                .agg(F.max(F.struct(*ordered)).alias("_v"))
-                .select("file_id", *[F.col(f"_v.{c}") for c in ordered]))
-        snap.write.mode("overwrite").parquet(
-            f"{_snapshot_dir(path)}/upto={upto}")
+        _latest(log.filter(F.col("ingest_batch") <= F.lit(upto))) \
+            .write.mode("overwrite").parquet(
+                f"{_snapshot_dir(path)}/upto={upto}")
         # reclamation: folded epoch dirs, then the superseded snapshots
         # (every one listed above is older than ``upto``)
         fs, _ = _hadoop_fs(spark, path)
@@ -233,29 +239,29 @@ def compact_logs(spark: SparkSession, out_dir: str,
     return done
 
 
-def _exact_history_edges(new: DataFrame, sig_hist: DataFrame) -> DataFrame:
-    """Exact edges from a micro-batch's ``(file_id, sha256)`` rows to
-    the strictly-earlier signature history ``sig_hist``.
+def _exact_keys(sigs: DataFrame, sig_hist: DataFrame | None,
+                cfg: DedupConfig) -> DataFrame:
+    """The rows ``exact_edges`` stars for one epoch: the batch's
+    ``(file_id, sha256[, repo])`` plus one history row per key the
+    batch holds, its min id.
 
-    The history is read as its ``(file_id, sha256)`` projection and
-    semi-joined to the batch's sha256 set (broadcast: a micro-batch is
-    small), so only the matching history rows reach the aggregate. Each
-    historical sha keeps one representative, its min id: copies of a
-    hash are already mutually connected from the epochs that ingested
-    them, so pairing each new copy with the min-id member keeps
-    components intact and the join linear (a 10^6-copy boilerplate sha
-    would otherwise emit 10^6 edges per new copy)."""
-    hist = (sig_hist.select("file_id", "sha256")
-            .join(F.broadcast(new.select("sha256")), "sha256", "left_semi")
-            .groupBy("sha256")
-            .agg(F.min("file_id").alias("src")))
-    return (hist.join(new.select(F.col("file_id").alias("dst"), "sha256"),
-                      "sha256")
-            .filter(F.col("src") != F.col("dst"))
-            .select(F.least("src", "dst").alias("src"),
-                    F.greatest("src", F.col("dst")).alias("dst"),
-                    F.lit(0.0).alias("dist"),
-                    F.lit("exact").alias("kind")))
+    The history is read as its key projection and semi-joined to the
+    batch's keys (broadcast: a micro-batch is small), so only the
+    matching history rows reach the aggregate. One representative per
+    key is enough: the history copies of a key are already connected
+    from the epochs that ingested them, and it keeps the star linear (a
+    10^6-copy boilerplate sha would otherwise add 10^6 rows per epoch).
+    The keys are ``exact_edges``' own, so ``in_folder`` scopes the
+    history match by ``repo`` as it scopes the batch."""
+    keys = ["sha256"] + (["repo"] if cfg.in_folder else [])
+    new = sigs.select("file_id", *keys)
+    if sig_hist is None:
+        return new
+    return new.unionByName(
+        sig_hist.select("file_id", *keys)
+        .join(F.broadcast(new.select(*keys)), keys, "left_semi")
+        .groupBy(*keys)
+        .agg(F.min("file_id").alias("file_id")))
 
 
 def _near_dup_edges(sigs: DataFrame, sig_hist: DataFrame | None,
@@ -281,65 +287,43 @@ def _near_dup_edges(sigs: DataFrame, sig_hist: DataFrame | None,
     return jaccard_edges(dedup_pairs(pairs), mh, cfg).drop("gen")
 
 
-def _latest_clusters(log: DataFrame) -> DataFrame:
-    """Latest-wins reduce of ``clusters/`` log rows: each file's
-    ``cluster_id`` from the newest epoch that wrote it."""
-    return (log.groupBy("file_id")
-            .agg(F.max_by("cluster_id", "ingest_batch").alias("cluster_id")))
-
-
 def _merge_clusters(spark: SparkSession, epoch_edges: DataFrame,
                     batch_id: int, clusters_dir: str) -> None:
     """Incremental connected-components merge (one epoch).
 
-    Contract this epoch's edges onto the PRIOR cluster roots, run CC on
-    the contracted graph only (its size is proportional to the epoch's
-    edges, never to history), and write a delta of changed/new
-    ``(file_id, cluster_id)`` rows under ``ingest_batch=<epoch>``.
-    Latest epoch wins per file (``current_clusters``). Labels are min
-    file_ids, so the incremental merge provably equals a batch CC over
-    the full accumulated edge set: min(A ∪ B) = min(min A, min B).
+    The prior clustering enters the epoch's graph as edges: each file
+    the epoch's edges touch that already has a cluster gets one edge to
+    its prior ``cluster_id``. ``connected_components`` over that graph
+    (its size is proportional to the epoch's edges, never to history)
+    labels every touched file and every prior root it reaches; prior
+    members whose root got a new label are relabelled through a join.
+    The delta is written under ``ingest_batch=<epoch>``; latest epoch
+    wins per file (``current_clusters``). A prior root is its cluster's
+    min file_id, so the merge equals a batch CC over the full
+    accumulated edge set: min(A ∪ B) = min(min A, min B).
     """
     from sparkdedup.operators.components import connected_components
-    e = epoch_edges.select("src", "dst")
-    touched = (e.select(F.explode(F.array("src", "dst")).alias("file_id"))
-               .distinct())
+    graph = epoch_edges.select("src", "dst")
     # snapshot + tail read: after a compaction the latest-wins groupBy
     # runs over one folded snapshot plus the few epochs since it, not
     # over every epoch directory ever written (round-4 verdict #4)
     clusters_hist = _history(spark, clusters_dir, batch_id)
-    if clusters_hist is not None:
-        prior_all = _latest_clusters(clusters_hist)
-        prior_sub = prior_all.join(touched, "file_id")
+    if clusters_hist is None:
+        delta = connected_components(graph)
     else:
-        prior_all = None
-        prior_sub = touched.withColumn("cluster_id",
-                                       F.lit(None).cast("long")).limit(0)
-    roots = touched.join(prior_sub, "file_id", "left").select(
-        "file_id",
-        F.coalesce("cluster_id", "file_id").alias("root"))
-    contracted = (e
-                  .join(roots.withColumnRenamed("root", "r_src"),
-                        e["src"] == roots["file_id"]).drop("file_id")
-                  .join(roots.withColumnRenamed("root", "r_dst")
-                        .alias("r2"),
-                        F.col("dst") == F.col("r2.file_id")).drop("file_id")
-                  .filter(F.col("r_src") != F.col("r_dst"))
-                  .select(F.col("r_src").alias("src"),
-                          F.col("r_dst").alias("dst"))
-                  .distinct())
-    cc = connected_components(contracted) \
-        .select(F.col("file_id").alias("root"),
-                F.col("cluster_id").alias("new_root"))
-    # (a) touched files whose root participated in a contracted edge
-    delta = (roots.join(cc, "root")
-             .select("file_id", F.col("new_root").alias("cluster_id")))
-    if prior_all is not None:
-        # (b) untouched members of prior clusters whose label changed
-        changed = cc.filter(F.col("root") != F.col("new_root")) \
-            .withColumnRenamed("root", "cluster_id")
-        relabel = (prior_all.join(changed, "cluster_id")
-                   .select("file_id", F.col("new_root").alias("cluster_id")))
+        prior = _latest(clusters_hist).select("file_id", "cluster_id")
+        touched = graph.select(F.explode(F.array("src", "dst"))
+                               .alias("file_id"))
+        graph = graph.unionByName(
+            prior.join(touched, "file_id", "left_semi")
+            .select(F.col("file_id").alias("src"),
+                    F.col("cluster_id").alias("dst")))
+        delta = connected_components(graph)
+        relabel = (prior.join(delta.select(F.col("file_id").alias("root"),
+                                           F.col("cluster_id").alias("new")),
+                              F.col("cluster_id") == F.col("root"))
+                   .filter(F.col("new") != F.col("cluster_id"))
+                   .select("file_id", F.col("new").alias("cluster_id")))
         delta = delta.unionByName(relabel).dropDuplicates(["file_id"])
     delta.write.mode("overwrite").parquet(
         f"{clusters_dir}/ingest_batch={batch_id}")
@@ -356,7 +340,7 @@ def current_clusters(spark: SparkSession, out_dir: str) -> DataFrame:
             errorClass="PATH_NOT_FOUND",
             messageParameters={
                 "path": f"{out_dir.rstrip('/')}/clusters"})
-    return _latest_clusters(log)
+    return _latest(log).select("file_id", "cluster_id")
 
 
 def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
@@ -365,7 +349,10 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
     """foreachBatch body: featurize once, read the strictly-earlier
     signature history once, emit exact (and with ``near_dup`` near) dup
     edges vs that history + within the batch, merge the cluster delta,
-    append the signatures. Every write targets ``ingest_batch=<epoch>``
+    append the signatures. The exact edges are one ``exact_edges`` call
+    over the batch's keys plus their min-id history rows
+    (``_exact_keys``), and the merge runs ``connected_components``
+    (``_merge_clusters``). Every write targets ``ingest_batch=<epoch>``
     under ``out_dir`` with overwrite — replays of the same epoch are
     idempotent.
 
@@ -388,11 +375,7 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
         if sigs.count() == 0:
             return
         sig_hist = _history(spark, f"{base}/signatures", batch_id)
-        # edges WITHIN the batch: same star pattern as operators/exact.py
-        edges = exact_edges(sigs, cfg)
-        if sig_hist is not None:
-            edges = edges.unionByName(_exact_history_edges(
-                sigs.select("file_id", "sha256"), sig_hist))
+        edges = exact_edges(_exact_keys(sigs, sig_hist, cfg), cfg)
         if near_dup:
             edges = edges.unionByName(_near_dup_edges(sigs, sig_hist, cfg))
         merge_edges(edges).write.mode("overwrite").parquet(

@@ -231,9 +231,10 @@ def test_replay_same_epoch_is_idempotent(spark, tmp_path):
 
 def test_incremental_clusters_across_batches(spark, tmp_path):
     """A cross-batch near-dup pair must land in ONE cluster via the
-    per-epoch contracted-graph merge — no recompute of prior epochs —
-    and the log-structured view must equal a batch CC over the full
-    accumulated edge set (round-3 verdict ask #5)."""
+    per-epoch merge (the epoch's edges plus one edge per touched file
+    to its prior root, through ``connected_components``) — no recompute
+    of prior epochs — and the log-structured view must equal a batch CC
+    over the full accumulated edge set (round-3 verdict ask #5)."""
     from sparkdedup.operators.components import connected_components
     from sparkdedup.streaming.ingest import current_clusters, incremental_dedup
     cfg = DedupConfig(similarity="similar")
@@ -292,6 +293,69 @@ def test_exact_chain_across_three_epochs(spark, tmp_path):
     assert len(edges) == 2
     assert all(e["kind"] == "exact" and e["dist"] == 0.0 for e in edges)
 
+
+def test_in_folder_scopes_exact_history(spark, tmp_path):
+    """``in_folder=True`` scopes the exact match against history by
+    ``repo``, as ``search_clusters`` scopes the batch: content in ``rA``
+    (epoch 0), then the same content in ``rB`` and again in ``rA``
+    (epoch 1), yields one ``rA``–``rA`` exact edge and no cross-repo
+    edge — the edges ``search_clusters`` finds on the same rows."""
+    from sparkdedup.plans.pipeline import build_signatures, search_clusters
+    cfg = DedupConfig(in_folder=True)
+    src, out = tmp_path / "incoming", tmp_path / "out"
+    same = "def shared(): return 'one body, two repos'\n" * 3
+    epochs = [[("rA", "s.py", "c0", "python", same)],
+              [("rB", "s.py", "c1", "python", same),
+               ("rA", "t.py", "c1", "python", same)]]
+    for i, rows in enumerate(epochs):
+        _write_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
+                     str(src / f"b{i}"))
+        _await(incremental_dedup(spark, cfg, str(src / "*"), str(out)))
+    sigs = spark.read.parquet(str(out / "signatures"))
+    repo = {r["file_id"]: r["repo"]
+            for r in sigs.select("file_id", "repo").collect()}
+    stream = {(frozenset((repo[e["src"]], repo[e["dst"]])), e["kind"])
+              for e in spark.read.parquet(str(out / "edges")).collect()}
+    assert stream == {(frozenset(["rA"]), "exact")}, stream
+    assert spark.read.parquet(str(out / "edges")).count() == 1
+    files = spark.createDataFrame([r for rows in epochs for r in rows],
+                                  INPUT_SCHEMA)
+    batch = search_clusters(*build_signatures(spark, cfg, files), cfg)
+    assert {(frozenset((repo[e["src"]], repo[e["dst"]])), e["kind"])
+            for e in batch.edges.collect()} == stream
+
+
+def test_merge_clusters_equals_batch_cc(spark, tmp_path):
+    """``_merge_clusters`` fed synthetic edges epoch by epoch: after
+    every epoch ``current_clusters`` equals ``connected_components``
+    over all edges so far. The hand-built case bridges two multi-member
+    epoch-0 clusters through non-root members, so neither root is
+    touched and the untouched members of one cluster must be relabelled;
+    the seeded random graphs add merges, chains and an empty epoch."""
+    import random
+    from sparkdedup.operators.components import connected_components
+    from sparkdedup.streaming.ingest import _merge_clusters, current_clusters
+    schema = "src long, dst long"
+    graphs = [[[(1, 2), (1, 3), (10, 11), (10, 12)], [(3, 12)]]]
+    for seed in range(3):
+        rng = random.Random(seed)
+        graphs.append([[tuple(rng.sample(range(40), 2)) for _ in range(6)]
+                       for _ in range(3)])
+    graphs[-1].append([])
+    for g, epochs in enumerate(graphs):
+        out = str(tmp_path / f"g{g}")
+        seen = []
+        for batch_id, edges in enumerate(epochs):
+            seen += edges
+            _merge_clusters(spark, spark.createDataFrame(edges, schema),
+                            batch_id, f"{out}/clusters")
+            got = {r["file_id"]: r["cluster_id"]
+                   for r in current_clusters(spark, out).collect()}
+            want = {r["file_id"]: r["cluster_id"]
+                    for r in connected_components(
+                        spark.createDataFrame(seen, schema)).collect()}
+            assert got == want, (g, batch_id)
+    assert got  # the last graph clustered something
 
 def _ancestors_contain(plan: str, needles: tuple, marker: str) -> bool:
     """True if some tree-ancestor line of the first line containing ALL
@@ -365,18 +429,19 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
 
 
 def test_exact_history_read_is_pruned(spark, tmp_path):
-    """The exact-vs-history join reads only the history's
-    ``(file_id, sha256)`` columns, semi-joined (broadcast) to the
-    batch's sha256 set before the min-id groupBy, and still pairs a new
-    copy with the min-id historical representative of its hash."""
+    """The epoch's exact edges (``exact_edges`` over ``_exact_keys``)
+    read only the history's ``(file_id, sha256)`` columns, semi-joined
+    (broadcast) to the batch's sha256 set before the min-id groupBy,
+    and still pair a new copy with the min-id historical representative
+    of its hash."""
     import re
     from sparkdedup.plans.pipeline import SIGNATURE_COLS
     from sparkdedup.sources.files import split_invalid
     from sparkdedup.functions.hashing import (with_file_id,
                                               with_length_cols, with_sha256)
     from sparkdedup.functions.shingles import with_signature
-    from sparkdedup.streaming.ingest import (_exact_history_edges, _history,
-                                            _merge_batch)
+    from sparkdedup.operators.exact import exact_edges
+    from sparkdedup.streaming.ingest import _exact_keys, _history, _merge_batch
     cfg = DedupConfig()
     out = str(tmp_path / "out")
     same = "def chain(): return 'identical content across epochs'\n" * 3
@@ -394,19 +459,22 @@ def test_exact_history_read_is_pruned(spark, tmp_path):
     sigs = with_signature(
         with_length_cols(with_sha256(with_file_id(valid))),
         cfg).select(*SIGNATURE_COLS)
-    e = _exact_history_edges(sigs.select("file_id", "sha256"),
-                             _history(spark, f"{out}/signatures", 2))
+    e = exact_edges(_exact_keys(sigs, _history(spark, f"{out}/signatures",
+                                               2), cfg), cfg)
     qe = e._jdf.queryExecution()
     plan = qe.optimizedPlan().toString()
     assert _ancestors_contain(plan, ("Relation [", "sha256"),
                               "Join LeftSemi, (sha256"), \
         "history signature scan must sit under the sha256 semi-join"
-    # the history table is the plan's only file scan (the batch side is
-    # in-memory)
-    physical = qe.executedPlan().toString()
+    got = {(r["src"], r["dst"], r["dist"], r["kind"]) for r in e.collect()}
+    # ``exact_edges`` reads its input twice; in the final adaptive plan
+    # the history is scanned once and its exchange reused, and it is the
+    # plan's only file scan (the batch side is in-memory)
+    physical = qe.executedPlan().toString().split("== Initial Plan ==")[0]
     scans = re.findall(r"FileScan parquet .*?ReadSchema: struct<([^>]*)>",
                        physical)
     assert len(scans) == 1, physical
+    assert "ReusedExchange" in physical, physical
     assert _ancestors_contain(physical, ("FileScan parquet",),
                               "LeftSemi, BuildRight"), \
         "the batch's sha256 set must be the broadcast side"
@@ -417,8 +485,7 @@ def test_exact_history_read_is_pruned(spark, tmp_path):
            for r in hist.select("path", "file_id").collect()}
     new_id = sigs.filter(F.col("path") == "s9.py").first()["file_id"]
     rep = min(ids["s0.py"], ids["s1.py"])
-    assert {(r["src"], r["dst"], r["dist"], r["kind"]) for r in e.collect()} \
-        == {(min(rep, new_id), max(rep, new_id), 0.0, "exact")}
+    assert got == {(min(rep, new_id), max(rep, new_id), 0.0, "exact")}
 
 
 def test_compaction_bounds_history_and_preserves_semantics(spark, tmp_path):
