@@ -189,6 +189,7 @@ class SearchResult:
     _persisted: list = field(default_factory=list)
     _n_files: int = 0         # valid files searched (difPy files_searched)
     _durations: dict = field(default_factory=dict)  # build/search ISO spans
+    _edge_counts: list = field(default_factory=list)  # {kind, gen, count}
 
     def release(self) -> None:
         """Unpersist every DataFrame the search pinned (sigs, reps,
@@ -265,26 +266,28 @@ class SearchResult:
         ``process.build|search.duration{start,end,seconds_elapsed}`` +
         ``parameters`` / ``files_searched`` / ``matches_found``.
 
-        One aggregation job over the edge set plus small counts. The
-        per-file invalid log is capped at ``max_invalid_logs`` entries
-        (``count`` stays exact) — difPy collects all of them, which is
+        The edge counts are the rows ``search_clusters`` collected when
+        it materialized the edges, so this runs one aggregate over the
+        clusters and one bounded collect of the invalid rows. The per-file
+        invalid log is capped at ``max_invalid_logs`` entries (``count``
+        stays exact: the invalid rows are counted only when there are
+        more than that) — difPy collects all of them, which is
         driver-unsafe at 10^12-file scale; deliberate deviation.
         Engine-specific extras live under the additive ``results`` key.
         """
-        agg = self.edges.groupBy("kind", "gen" if "gen" in
-                                 self.edges.columns else F.lit("-")).count()
-        edge_rows = [r.asDict() for r in agg.collect()]
         n_matched, n_clusters = self.clusters.agg(
             F.count(F.lit(1)), F.countDistinct("cluster_id")).first()
-        n_invalid = self.invalid.count()
-        inv_rows = self.invalid.limit(max_invalid_logs).collect()
-        logs = {f"{r['repo']}/{r['path']}": r["reason"] for r in inv_rows}
+        inv_rows = self.invalid.limit(max_invalid_logs + 1).collect()
+        n_invalid = (self.invalid.count() if len(inv_rows) > max_invalid_logs
+                     else len(inv_rows))
+        logs = {f"{r['repo']}/{r['path']}": r["reason"]
+                for r in inv_rows[:max_invalid_logs]}
+        edge_rows = self._edge_counts
         dup = sum(r["count"] for r in edge_rows if r["kind"] == "exact")
         near = sum(r["count"] for r in edge_rows if r["kind"] == "near")
         contained = sum(r["count"] for r in edge_rows
                         if r["kind"] == "contained")
-        capped = sum(r["count"] for r in edge_rows
-                     if r.get("gen") == "star")
+        capped = sum(r["count"] for r in edge_rows if r["gen"] == "star")
         cfg = self.cfg
         return {
             "directory": list(cfg.tables),
@@ -400,9 +403,12 @@ def search_clusters(sigs: DataFrame, invalid: DataFrame,
         # stage (band shuffle, Hamming/Jaccard verify, SA containment
         # verify) runs HERE, so its wall-time is attributable separately
         # from the CC rounds that follow (which then iterate over the
-        # cached edges).
+        # cached edges). The materializing job is the (kind, gen) count
+        # that stats() reports, so stats() needs no edge job of its own.
         t1 = time.monotonic()
-        n_edges = edges.count()
+        edge_counts = [r.asDict() for r in
+                       edges.groupBy("kind", "gen").count().collect()]
+        n_edges = sum(r["count"] for r in edge_counts)
         timings["materialize_edges"] = time.monotonic() - t1
         t1 = time.monotonic()
         clusters = stage("clusters", lambda: connected_components(edges))
@@ -426,7 +432,7 @@ def search_clusters(sigs: DataFrame, invalid: DataFrame,
     return SearchResult(cfg=cfg, edges=edges, clusters=clusters,
                         ranked=ranked, invalid=invalid, _timings=timings,
                         _persisted=persisted, _n_files=n_sigs,
-                        _durations=durations)
+                        _durations=durations, _edge_counts=edge_counts)
 
 
 def _duration(start: datetime, end: datetime) -> dict:

@@ -14,7 +14,11 @@ this module is the Spark-native answer:
   micro-batch — no retraining of semantics, one code path.
 * ``incremental_dedup`` — ``foreachBatch`` merge: each micro-batch is
   featurized once, appended to the ``signatures`` table, and dup edges
-  are emitted for collisions WITHIN the batch and AGAINST history:
+  are emitted for collisions WITHIN the batch and AGAINST history. The
+  table logs ``SIGNATURE_COLS`` minus ``UNLOGGED_COLS`` (``content``,
+  ``anchors``): history is read for its keys and signatures only, the
+  way difPy's build artifact keeps each file's compared feature and
+  not the file (dif.py:61):
 
   - exact: the batch operator ``exact_edges`` over the batch's
     ``(file_id, sha256[, repo])`` rows plus one min-id history row per
@@ -47,9 +51,10 @@ partially-committed epoch on disk (e.g. a crash between the signatures
 write and the checkpoint commit) never sees those rows as history, so
 the rewrite stays byte-equivalent (round-3 verdict "What's wrong #2").
 
-All table probes and paths are plain URI strings handed to the Spark
-reader — no local-filesystem pathlib — so the module works unchanged
-on HDFS/S3 (round-2 advice).
+All paths are plain URI strings handed to the Spark reader, and every
+table probe goes through the Hadoop FS the reader resolves
+(``_hadoop_fs``) — no local-filesystem pathlib — so the module works
+unchanged on HDFS/S3 (round-2 advice).
 """
 
 from __future__ import annotations
@@ -65,6 +70,11 @@ from sparkdedup.operators.lsh import (candidate_pairs, dedup_pairs,
 from sparkdedup.operators.verify import jaccard_edges
 from sparkdedup.plans.pipeline import featurize, merge_edges
 from sparkdedup.sources.files import INPUT_SCHEMA, split_invalid
+
+#: ``SIGNATURE_COLS`` the ``signatures/`` log does not keep: no epoch
+#: reads them (history is read for ``file_id, sha256, minhash, simhash,
+#: len_bucket, repo``), and ``content`` alone is most of a row's bytes.
+UNLOGGED_COLS = ("content", "anchors")
 
 
 def read_file_stream(spark: SparkSession, path: str,
@@ -133,22 +143,28 @@ def _read_log(spark: SparkSession, path: str) -> DataFrame | None:
     crash between the snapshot write and the deletes therefore cannot
     double-count rows, which makes the deletes pure space reclamation
     and the whole compaction crash-safe without any atomic rename.
-    Returns None when the table has no data yet: the reader itself is
-    the FS-agnostic existence probe, so the epochs are listed once."""
+    Snapshot and tail union by name with missing columns allowed: a
+    snapshot folded by an earlier version still carries ``content``
+    and ``anchors``, which the narrow tail lacks.
+
+    Returns None when the table has no data yet. The directory is
+    probed through the Hadoop FS first; a directory that exists but
+    holds no data file (a crashed first write leaves only
+    ``_temporary/``) makes the reader fail schema inference, which
+    reads as no data too."""
     snap_path, upto = _latest_snapshot(spark, path)
-    try:
-        epochs = spark.read.parquet(path)
-    except AnalysisException:
-        epochs = None
-    except Exception as exc:  # Spark 4 raises connect-style subclasses
-        if "PATH_NOT_FOUND" not in str(exc) \
-                and "Path does not exist" not in str(exc):
-            raise
-        epochs = None
+    fs, hp = _hadoop_fs(spark, path)
+    epochs = None
+    if fs.exists(hp):
+        try:
+            epochs = spark.read.parquet(path)
+        except AnalysisException:
+            pass
     snap = spark.read.parquet(snap_path) if snap_path is not None else None
     if epochs is not None and snap is not None:
         return snap.unionByName(
-            epochs.filter(F.col("ingest_batch") > F.lit(upto)))
+            epochs.filter(F.col("ingest_batch") > F.lit(upto)),
+            allowMissingColumns=True)
     return epochs if epochs is not None else snap
 
 
@@ -199,7 +215,9 @@ def compact_logs(spark: SparkSession, out_dir: str,
     2. latest-wins-reduce all rows with ``ingest_batch <= upto`` per
        ``file_id`` (for the append-only signatures this is a pure
        file-count consolidation; for ``clusters`` it collapses
-       superseded delta rows) and write ``T_snapshot/upto=<upto>``;
+       superseded delta rows) and write ``T_snapshot/upto=<upto>``
+       without ``UNLOGGED_COLS``, so the snapshot of an ``out_dir``
+       whose epochs still carry ``content``/``anchors`` sheds them;
     3. delete the folded epoch directories and older snapshots — pure
        space reclamation, since ``_read_log`` already ignores epoch
        dirs covered by the snapshot.
@@ -224,7 +242,8 @@ def compact_logs(spark: SparkSession, out_dir: str,
         upto = max(n for n, _ in epochs) - 1
         if upto < 0 or upto <= max((n for n, _ in snaps), default=-1):
             continue  # nothing new to fold
-        _latest(log.filter(F.col("ingest_batch") <= F.lit(upto))) \
+        _latest(log.drop(*UNLOGGED_COLS)
+                .filter(F.col("ingest_batch") <= F.lit(upto))) \
             .write.mode("overwrite").parquet(
                 f"{_snapshot_dir(path)}/upto={upto}")
         # reclamation: folded epoch dirs, then the superseded snapshots
@@ -349,12 +368,14 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
     """foreachBatch body: featurize once, read the strictly-earlier
     signature history once, emit exact (and with ``near_dup`` near) dup
     edges vs that history + within the batch, merge the cluster delta,
-    append the signatures. The exact edges are one ``exact_edges`` call
-    over the batch's keys plus their min-id history rows
-    (``_exact_keys``), and the merge runs ``connected_components``
-    (``_merge_clusters``). Every write targets ``ingest_batch=<epoch>``
-    under ``out_dir`` with overwrite — replays of the same epoch are
-    idempotent.
+    append the signatures. The featurized rows drop ``UNLOGGED_COLS``
+    before they are cached, so the cache and the ``signatures/`` epoch
+    hold only what the branches read. The exact edges are one
+    ``exact_edges`` call over the batch's keys plus their min-id
+    history rows (``_exact_keys``), and the merge runs
+    ``connected_components`` (``_merge_clusters``). Every write targets
+    ``ingest_batch=<epoch>`` under ``out_dir`` with overwrite — replays
+    of the same epoch are idempotent.
 
     With ``compact_every=k``, every k-th epoch ends by folding the log
     tables into their latest-wins snapshots (``compact_logs``). Running
@@ -369,8 +390,9 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
     epoch = f"ingest_batch={batch_id}"
     valid, invalid = split_invalid(batch, cfg)
     invalid.write.mode("overwrite").parquet(f"{base}/invalid/{epoch}")
-    # ONE featurize pass feeds every branch below
-    sigs = featurize(valid, cfg).persist()
+    # ONE featurize pass feeds every branch below; the cache and the
+    # signatures/ epoch hold only the columns history reads
+    sigs = featurize(valid, cfg).drop(*UNLOGGED_COLS).persist()
     try:
         if sigs.count() == 0:
             return
@@ -412,18 +434,22 @@ def incremental_dedup(spark: SparkSession, cfg: DedupConfig,
     compaction to an external maintenance schedule.
     Output layout under ``out_dir`` (each sink partitioned by
     ``ingest_batch`` for idempotent epoch overwrite, one data directory
-    per epoch and no sub-partitions): ``signatures/``, ``edges/`` (exact
-    AND near rows, one per unordered pair, ``kind`` distinguishes),
-    ``clusters/`` (per-epoch deltas; read via ``current_clusters``),
-    ``invalid/``, ``_checkpoint/`` (Spark streaming offsets). ``out_dir``
-    may be any Hadoop-FS URI.
+    per epoch and no sub-partitions): ``signatures/``
+    (``SIGNATURE_COLS`` minus ``UNLOGGED_COLS``: no ``content``, no
+    ``anchors``), ``edges/`` (exact AND near rows, one per unordered
+    pair, ``kind`` distinguishes), ``clusters/`` (per-epoch deltas;
+    read via ``current_clusters``), ``invalid/``, ``_checkpoint/``
+    (Spark streaming offsets). ``out_dir`` may be any Hadoop-FS URI.
 
     An ``out_dir`` written by an earlier version may also hold a
     ``bands/`` table (and ``bands_snapshot/``) of stored band keys; no
     epoch reads it any more, so it resumes as is and those directories
-    can be deleted. One whose signature epochs were sub-partitioned by
-    a sha256 prefix cannot be resumed: the history read over old and
-    new epoch directories fails with Spark's
+    can be deleted. Its signature epochs and snapshot may still carry
+    ``content`` and ``anchors``: it resumes as is too (snapshot and
+    tail union by name), and its next compaction folds them into a
+    snapshot without those columns. One whose signature epochs were
+    sub-partitioned by a sha256 prefix cannot be resumed: the history
+    read over old and new epoch directories fails with Spark's
     ``CONFLICTING_PARTITION_COLUMN_NAMES``. Re-ingest into a fresh
     ``out_dir`` instead.
     """

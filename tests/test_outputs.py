@@ -8,6 +8,7 @@ from datetime import datetime
 from sparkdedup.config import DedupConfig
 from sparkdedup.corpus import files_table
 from sparkdedup.plans.pipeline import run as run_pipeline
+from sparkdedup.sources.files import INPUT_SCHEMA
 
 
 def _res(spark, **kw):
@@ -100,3 +101,18 @@ def test_lower_quality_excludes_representatives(spark):
     lq = {r["file_id"] for r in res.lower_quality_df.collect()}
     assert not (keep & lq)
     assert keep and lq
+
+
+def test_stats_invalid_count_exact_above_log_cap(spark):
+    """With more invalid files than ``max_invalid_logs``, the log is
+    capped and ``count`` is still the exact number of invalid rows."""
+    rows = ([("r", f"ok{i}.py", "c", "python", f"def f{i}(): return {i}")
+             for i in range(4)]
+            + [("r", f"bad{i}.py", "c", "python", None) for i in range(5)])
+    res = run_pipeline(spark, DedupConfig(similarity="similar"),
+                       spark.createDataFrame(rows, INPUT_SCHEMA))
+    for cap in (0, 2, 5, 6):
+        inv = res.stats(max_invalid_logs=cap)["invalid_files"]
+        assert inv["count"] == 5, cap
+        assert len(inv["logs"]) == min(cap, 5), cap
+    assert res.stats(max_invalid_logs=2)["total_files"] == 9

@@ -120,6 +120,8 @@ def test_incremental_near_dup_across_batches(spark, tmp_path):
     # band keys derive from the signature table: no bands/ is written
     import os
     assert not os.path.exists(str(out / "bands"))
+    # the log keeps only the columns history reads
+    assert not {"content", "anchors"} & set(sigs.columns)
 
 
 def test_near_dup_finds_history_ingested_without_it(spark, tmp_path):
@@ -227,6 +229,25 @@ def test_replay_same_epoch_is_idempotent(spark, tmp_path):
     # clusters delta must replay identically too
     cl = spark.read.parquet(f"{out}/clusters/ingest_batch=1")
     assert cl.groupBy("file_id").count().filter("count > 1").count() == 0
+
+
+def test_replay_after_crashed_first_write(spark, tmp_path):
+    """A first signatures write that crashed leaves ``ingest_batch=0/``
+    holding only ``_temporary/``: the table directory exists but Spark
+    cannot infer a schema for it. The replay of epoch 0 reads that as
+    no history and commits the epoch."""
+    import os
+    from sparkdedup.streaming.ingest import _merge_batch
+    cfg = DedupConfig()
+    out = tmp_path / "out"
+    os.makedirs(out / "signatures" / "ingest_batch=0" / "_temporary" / "0")
+    b0 = spark.createDataFrame(
+        [("r1", "a.py", "c1", "python", "def shared(): return 42"),
+         ("r1", "b.py", "c2", "python", "def shared(): return 42")],
+        INPUT_SCHEMA)
+    _merge_batch(b0, 0, cfg, str(out))
+    assert spark.read.parquet(str(out / "signatures")).count() == 2
+    assert spark.read.parquet(str(out / "edges")).count() == 1
 
 
 def test_incremental_clusters_across_batches(spark, tmp_path):
@@ -590,6 +611,7 @@ def test_auto_compaction_every_k_epochs(spark, tmp_path):
         assert left == ["ingest_batch=2", "ingest_batch=3"], (t, left)
         assert os.path.isdir(str(out / f"{t}_snapshot" / "upto=1"))
     snap = spark.read.parquet(str(out / "signatures_snapshot/upto=1"))
+    assert not {"content", "anchors"} & set(snap.columns)
     sigs = spark.read.parquet(str(out / "signatures"))
     ids = {r["path"]: r["file_id"] for r in
            snap.select("path", "file_id").unionByName(
@@ -601,6 +623,63 @@ def test_auto_compaction_every_k_epochs(spark, tmp_path):
     batch_cc = {r["file_id"]: r["cluster_id"] for r in connected_components(
         spark.read.parquet(str(out / "edges"))).collect()}
     assert got == batch_cc
+
+
+def test_legacy_wide_snapshot_resumes(spark, tmp_path):
+    """An ``out_dir`` whose signatures snapshot was folded by a version
+    that logged every ``SIGNATURE_COLS`` column (``content``,
+    ``anchors``) resumes under narrow tail epochs: snapshot and tail
+    union by name, the next epoch finds its exact edge into the
+    snapshot and its near edge into the tail, ``current_clusters``
+    equals a batch CC over ``edges/``, and the next compaction writes
+    a narrow snapshot."""
+    import shutil
+    from sparkdedup.functions.hashing import with_file_id
+    from sparkdedup.operators.components import connected_components
+    from sparkdedup.plans.pipeline import featurize
+    from sparkdedup.sources.files import split_invalid
+    from sparkdedup.streaming.ingest import (_merge_batch, compact_logs,
+                                            current_clusters)
+    cfg = DedupConfig(similarity="similar")
+    out = str(tmp_path / "out")
+    base = ("def compute(a, b):\n"
+            "    return a * b + a - b  # some shared logic here\n") * 4
+    zbase = " ".join(f"ztoken{i} word{i*7%13}" for i in range(60))
+    epochs = [
+        [("r0", "x.py", "c0", "python", base)],
+        [("r1", "y.py", "c1", "python", "unrelated words " * 20)],
+        [("r2", "z.py", "c2", "python", zbase)],
+        [("r3", "x_copy.py", "c3", "python", base),
+         ("r3", "z2.py", "c3", "python",
+          zbase.replace("ztoken3 ", "ztokenX "))],
+    ]
+    frames = [spark.createDataFrame(rows, INPUT_SCHEMA) for rows in epochs]
+    for i in range(3):
+        _merge_batch(frames[i], i, cfg, out, near_dup=True)
+    # fold epochs 0-1 the way an earlier version did: every column kept
+    wide = featurize(split_invalid(frames[0], cfg)[0], cfg) \
+        .withColumn("ingest_batch", F.lit(0)).unionByName(
+            featurize(split_invalid(frames[1], cfg)[0], cfg)
+            .withColumn("ingest_batch", F.lit(1)))
+    wide.write.parquet(f"{out}/signatures_snapshot/upto=1")
+    for i in range(2):
+        shutil.rmtree(f"{out}/signatures/ingest_batch={i}")
+    assert {"content", "anchors"} <= set(
+        spark.read.parquet(f"{out}/signatures_snapshot/upto=1").columns)
+    _merge_batch(frames[3], 3, cfg, out, near_dup=True)
+    ids = {r["path"]: r["file_id"] for f in frames
+           for r in with_file_id(f).select("path", "file_id").collect()}
+    new = {frozenset((r["src"], r["dst"])): r["kind"] for r in
+           spark.read.parquet(f"{out}/edges/ingest_batch=3").collect()}
+    assert new[frozenset((ids["x.py"], ids["x_copy.py"]))] == "exact"
+    assert new[frozenset((ids["z.py"], ids["z2.py"]))] == "near"
+    got = sorted(current_clusters(spark, out).collect())
+    assert got == sorted(connected_components(
+        spark.read.parquet(f"{out}/edges")).collect())
+    assert compact_logs(spark, out)["signatures"] == 2
+    snap = spark.read.parquet(f"{out}/signatures_snapshot/upto=2")
+    assert not {"content", "anchors"} & set(snap.columns)
+    assert snap.count() == 3              # epochs 0-2; 3 is the tail
 
 
 def test_near_dup_history_cap_emits_cross_star(spark, tmp_path):
