@@ -117,39 +117,35 @@ def plan_edges(sigs: DataFrame, reps: DataFrame,
     # that sha256 grouping alone would miss. The Hamming cut runs
     # inside the band-bucket expansion (operators/lsh.py), so the pairs
     # arrive narrow and pre-cut.
-    if cfg.containment:
-        # The LSH-pair and containment-candidate materializations are
-        # INDEPENDENT eager jobs over the same cached reps (each ends
-        # in a localCheckpoint before the final edge DAG references it
-        # several times). Submit both from their own thread so the
-        # scheduler interleaves their stages: each job's stage tails
-        # (the straggling last tasks of a shuffle) leave idle slots the
-        # other job fills. Sequential submission measured ~54% executor
-        # occupancy across the edge-planning phase at local[8]/1.2M;
-        # overlap costs nothing at low parallelism (the scheduler just
-        # queues) and lifts occupancy exactly where spare slots exist.
-        # The verify stages themselves stay LAZY here on purpose: the
-        # edge-merge action downstream runs the exact, Jaccard-verify
-        # and SA-verify subtrees as independent stages of ONE job, which
-        # the scheduler already overlaps — a round-6 variant that
-        # eagerly checkpointed each verified branch in its own thread
-        # measured +0.9 s at sf0.1 (three extra job barriers) and a
-        # wash at 1.2M, so it was reverted. Session-level job
-        # submission is thread-safe; both closures only read sigs/reps.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_near = pool.submit(
-                lambda: jaccard_edges(
-                    dedup_pairs(candidate_pairs(reps, cfg)), reps, cfg))
+    # The LSH-pair and containment-candidate materializations are
+    # INDEPENDENT eager jobs over the same cached reps (each ends
+    # in a localCheckpoint before the final edge DAG references it
+    # several times). Submit each from its own thread so the
+    # scheduler interleaves their stages: each job's stage tails
+    # (the straggling last tasks of a shuffle) leave idle slots the
+    # other job fills. Sequential submission measured ~54% executor
+    # occupancy across the edge-planning phase at local[8]/1.2M;
+    # overlap costs nothing at low parallelism (the scheduler just
+    # queues) and lifts occupancy exactly where spare slots exist.
+    # The verify stages themselves stay LAZY here on purpose: the
+    # edge-merge action downstream runs the exact, Jaccard-verify
+    # and SA-verify subtrees as independent stages of ONE job, which
+    # the scheduler already overlaps — a round-6 variant that
+    # eagerly checkpointed each verified branch in its own thread
+    # measured +0.9 s at sf0.1 (three extra job barriers) and a
+    # wash at 1.2M, so it was reverted. Session-level job
+    # submission is thread-safe; both closures only read sigs/reps.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        branches = [pool.submit(lambda: jaccard_edges(
+            dedup_pairs(candidate_pairs(reps, cfg)), reps, cfg))]
+        if cfg.containment:
             # containment_edges manages its own transient storage (eager
             # localCheckpoint + internal unpersist) — nothing to release
-            f_cont = pool.submit(containment_edges, reps, cfg)
-            near = f_near.result()
-            cont = f_cont.result().withColumn("gen", F.lit("contain"))
-        edges = edges.unionByName(near).unionByName(cont)
-    else:
-        near = jaccard_edges(dedup_pairs(candidate_pairs(reps, cfg)),
-                             reps, cfg)
-        edges = edges.unionByName(near)
+            branches.append(pool.submit(
+                lambda: containment_edges(reps, cfg)
+                .withColumn("gen", F.lit("contain"))))
+        for branch in branches:
+            edges = edges.unionByName(branch.result())
     return merge_edges(edges)
 
 
